@@ -12,7 +12,7 @@ Stages:
   2. headline operator queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
      CRAWL_BENCH_PAGES / CRAWL_BENCH_DOMAINS / CRAWL_BENCH_ROUNDS.
 """
 
@@ -95,11 +95,6 @@ def run_crawl_bench(spark, n_pages: int, n_domains: int, rounds: int) -> dict:
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
         per_domain_quota=1,
-        # per-key HEADS table scheduling (default; byte-identical to the
-        # full scan — tests/test_heads_schedule.py): the politeness tick
-        # reads O(#keys × B) rows, the many-keys-regime shape. Override
-        # with CRAWL_BENCH_HEADS_MODE=scan for the footer-stats path.
-        extra={"heads_mode": os.environ.get("CRAWL_BENCH_HEADS_MODE", "table")},
     )
     state_dir = tempfile.mkdtemp(prefix="crawlbench_")
     eng = CrawlEngine(
@@ -130,8 +125,8 @@ def run_crawl_bench(spark, n_pages: int, n_domains: int, rounds: int) -> dict:
         "urls_per_sec": round(scheduled / dt, 1) if dt > 0 else 0.0,
         "round_secs": round_secs,
         "steady_round_sec_median": steady[len(steady) // 2] if steady else None,
-        # heads-scheduler telemetry: frontier rows the schedule actually
-        # read vs the full frontier (stats-pruned scan; None = full scan)
+        # HEADS-table telemetry: frontier rows the schedule actually
+        # read vs the full frontier
         "sched_scan_last": eng.stats.rounds[-1].sched_scan if eng.stats.rounds else None,
         "n_pages": n_pages,
         "n_domains": n_domains,
@@ -140,7 +135,7 @@ def run_crawl_bench(spark, n_pages: int, n_domains: int, rounds: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     n_pages = int(os.environ.get("CRAWL_BENCH_PAGES", "200000"))
     n_domains = int(os.environ.get("CRAWL_BENCH_DOMAINS", "5000"))
     rounds = int(os.environ.get("CRAWL_BENCH_ROUNDS", "8"))

@@ -41,16 +41,12 @@ from pyspark.sql import types as T
 from crawlspark.config import CrawlConfig
 from crawlspark.functions import traps
 from crawlspark.functions import urls as U
-from crawlspark.icelite import IceliteCatalog, scan_parquet_stats
+from crawlspark.icelite import IceliteCatalog
 from crawlspark.operators import admission as ADM
 from crawlspark.operators import badurls as BAD
 from crawlspark.operators import fetch as FE
 from crawlspark.operators.membership import BloomSeenFilter
-from crawlspark.operators.schedule import (
-    schedule_round,
-    select_head_files,
-    tail_key_rows,
-)
+from crawlspark.operators.schedule import schedule_round
 
 FRONTIER_FIELDS = [
     ("url", T.StringType()),
@@ -88,6 +84,14 @@ STATUS_VALUES = (
     "skipped_type",
     "low_data",
 )
+# driver-side known-domain cache budget (see CrawlEngine._known_doms)
+KNOWN_DOMAINS_CACHE_LIMIT = 1_000_000
+# bad-URL memory rows past which the similarity join shuffles
+BROADCAST_BAD_LIMIT = 500_000
+# tombstone parts that trigger a pending compaction between snapshots
+PENDING_COMPACT_PARTS = 64
+# HEADS table budget in rounds: B = quota × HEADS_REFRESH_ROUNDS rows per key
+HEADS_REFRESH_ROUNDS = 8
 
 
 def _schema(fields) -> T.StructType:
@@ -153,8 +157,8 @@ class RoundStats:
     new_urls: int
     by_status: dict[str, int]
     seconds: float
-    # schedule-scan telemetry (stats-pruned frontier heads): files/rows the
-    # schedule actually read vs the full frontier; None = full scan ran
+    # schedule-scan telemetry (HEADS table): parts/rows the schedule
+    # actually read vs the full frontier
     sched_scan: dict | None = None
 
 
@@ -197,27 +201,17 @@ class CrawlEngine:
         import threading
 
         self._delta_lock = threading.Lock()
-        # membership pre-filter for the seen anti-join: 'bloom' (OR-merge
-        # bitarrays) or 'cuckoo' (16-bit fingerprints, overflow-safe) —
-        # both uphold the no-false-negative exactness contract
-        filt_kind = config.extra.get(
-            "seen_filter", "bloom" if config.extra.get("use_bloom") else None
-        )
-        if filt_kind == "bloom":
-            self.bloom = BloomSeenFilter(
+        # opt-in membership pre-filter for the seen anti-join (OR-merged
+        # bloom bitarrays; no false negatives, so the seen set is exact)
+        self.bloom = (
+            BloomSeenFilter(
                 n_buckets=config.frontier_buckets,
                 bits_per_key=config.bloom_bits_per_key,
                 expected_keys_per_bucket=int(config.extra.get("bloom_keys_per_bucket", 100_000)),
             )
-        elif filt_kind == "cuckoo":
-            from crawlspark.operators.membership import CuckooSeenFilter
-
-            self.bloom = CuckooSeenFilter(
-                n_buckets=config.frontier_buckets,
-                expected_keys_per_bucket=int(config.extra.get("bloom_keys_per_bucket", 100_000)),
-            )
-        else:
-            self.bloom = None
+            if config.extra.get("use_bloom")
+            else None
+        )
         self.bloom_state: DataFrame | None = None
         self.checkpoint_interval = checkpoint_interval
         self.pace_wallclock = pace_wallclock
@@ -225,7 +219,6 @@ class CrawlEngine:
         # grow-forever memories: once past the broadcast budget the
         # similarity joins degrade to shuffled hash joins (scale guard)
         self._n_bad_total = 0
-        self._broadcast_bad_limit = int(config.extra.get("broadcast_bad_limit", 500_000))
         # forced-broadcast budget for the per-round scheduled batch (fetch
         # join + near-dup probe): O(#ready-keys) rows at K=1 — multi-GB at
         # 10^8+ domains, so past the budget those joins shuffle instead
@@ -237,9 +230,6 @@ class CrawlEngine:
         # disabled (None) past the budget — the relational anti-join path
         # is the semantics either way
         self._known_doms: set | None = set()
-        self._known_doms_limit = int(
-            config.extra.get("known_domains_cache_limit", 1_000_000)
-        )
         # politeness key (reference keys its queues + robots cache on
         # netloc, crawler/frontier.py:42/:136-141; registered_domain is the
         # stricter default that also covers subdomain-farm abuse)
@@ -281,55 +271,26 @@ class CrawlEngine:
             (int(eb["threshold"]), int(eb["rounds"])) if eb else None
         )
         self._backoff_state: DataFrame | None = None
-        # stats-pruned frontier-heads scheduling (north_rule 10^10 scan):
-        # when the pending base is the sorted compacted layout, each round
-        # reads only per-key head files (footer/manifest bounds) + deltas
-        # + tombstones instead of the whole frontier
-        self._heads_sched = bool(config.extra.get("heads_scheduling", True))
         # opt-in priority scheduling (the north_star's "priority queue
         # realized as window-ranked micro-batches", end-to-end in the
         # engine): extra["priority_col"] names a pending column ranked
         # ASC before discovery_seq within each politeness key — e.g.
         # "depth" schedules shallow URLs first. Default None keeps the
         # reference's pure FIFO (conformance schedules byte-identical).
-        # Heads pruning assumes FIFO-by-seq file order, so priority mode
-        # always scans the full frontier for scheduling.
         self._priority_col: str | None = config.extra.get("priority_col")
-        if self._priority_col:
-            self._heads_sched = False
-        # per-key HEADS table scheduling (VERDICT r4 #3 — the many-keys
-        # regime): extra["heads_mode"]="table" maintains a compact table
-        # of each politeness key's B = quota × heads_refresh_rounds
-        # lowest-seq pending rows, so a politeness tick reads
-        # O(#keys × B) rows REGARDLESS of frontier depth or file layout.
-        # The footer-stats scan path above prunes only while
-        # #keys ≲ #files; at the north_rule target (10^10 URLs over 10^7
-        # domains) #keys ≫ #files and its scan floor degrades back to
-        # O(frontier) — the HEADS table is the shape that survives there.
-        # Maintenance: admissions since the last build ride the scan as
-        # delta parts; pops are anti-joined; a full rebuild (one
+        # per-key HEADS table, the schedule source: each politeness key's
+        # B = quota × _heads_refresh_rounds first pending rows in schedule
+        # order, so a politeness tick reads O(#keys × B) rows regardless
+        # of frontier depth or file layout (the north_rule's 10^10 URLs
+        # over 10^7 domains). Admissions since the last build ride the
+        # scan as delta parts; pops are anti-joined; a full rebuild (one
         # frontier pass, amortized 1/refresh per round) runs only when
         # accumulated tombstone parts could invalidate a key's whole
         # budget, or after compaction/snapshot rewrites the base.
-        self._heads_mode = str(config.extra.get("heads_mode", "scan"))
-        if self._priority_col:
-            # heads are maintained in FIFO seq order; a priority column
-            # re-ranks within keys, so table mode must full-scan
-            self._heads_mode = "scan"
-        if self._heads_mode == "table":
-            self._heads_sched = False  # stats-scan machinery unused
-        self._heads_refresh_rounds = max(
-            2, int(config.extra.get("heads_refresh_rounds", 8))
-        )
+        self._heads_refresh_rounds = HEADS_REFRESH_ROUNDS
         self._heads_df: DataFrame | None = None
         self._heads_popped_idx = 0
         self._heads_pending_idx = 0
-        self._sorted_base: str | None = None  # path of the sorted base part
-        self._fstats_cache: dict[str, list[dict]] = {}
-        # target rows per data file in the compacted layout — file count
-        # scales with frontier size so the per-round heads scan stays
-        # O(#keys × file_rows), not O(frontier)
-        self._pending_file_rows = int(config.extra.get("pending_file_rows", 1_000_000))
         self._load_corpus()
 
     # ------------------------------------------------------------------
@@ -568,129 +529,52 @@ class CrawlEngine:
                 total += n
         return total
 
-    def _sorted_layout(self, df: DataFrame) -> DataFrame:
-        """The compacted frontier layout: range-partitioned + sorted on
-        (politeness key, discovery_seq) so every data file carries TIGHT
-        footer/manifest bounds for both columns and each key's FIFO head
-        lives in the first file whose key range covers it. Partition count
-        scales with frontier rows (pending_file_rows per file) — the
-        heads scheduler's per-round scan is then O(#keys × file_rows)
-        regardless of frontier depth."""
-        n = self._pending_rows_estimate()
-        parts = max(
-            2,
-            self.spark.sparkContext.defaultParallelism,
-            n // self._pending_file_rows + 1,
-        )
-        return df.repartitionByRange(
-            parts, self._key_col, "discovery_seq"
-        ).sortWithinPartitions(self._key_col, "discovery_seq")
-
-    def _compact_pending(self, force: bool = False) -> None:
+    def _compact_pending(self) -> None:
         """Fold tombstones into a single base part (O(frontier), run at
-        snapshot commits / tombstone pile-up only) in the sorted layout
-        (see _sorted_layout) the stats-pruned heads scheduler reads."""
-        if not force and not self._state_parts.get("popped") and len(
+        tombstone pile-up only; snapshot commits compact on their own)."""
+        if not self._state_parts.get("popped") and len(
             self._state_parts.get("pending", [])
         ) <= 1:
             return
-        compacted = self._sorted_layout(self.pending)
-        self._append_state_delta(compacted, "pending", single=False)
+        self._append_state_delta(self.pending, "pending", single=False)
         self._state_parts["pending"] = [self._state_parts["pending"][-1]]
         self._state_parts["popped"] = []
-        self._sorted_base = self._state_parts["pending"][0]
         # the parts list was rewritten — the HEADS table's delta/tombstone
         # indexes are stale; force a rebuild on the next schedule tick
         self._heads_df = None
-        # superseded bases never get scheduled again — REPLACE the stats
-        # cache instead of accumulating one entry per compaction forever
-        self._fstats_cache = {}
-        if self._heads_sched:
-            # prime the stats cache with tail-key-annotated footer entries
-            # so this compaction's files prune exactly from the next round
-            try:
-                entries = scan_parquet_stats(self._sorted_base) or None
-            except Exception:
-                entries = None
-            if entries:
-                self._annotate_tail_stats(self._sorted_base, entries)
-            self._fstats_cache[self._sorted_base] = entries
-
-    def _annotate_tail_stats(self, path: str, entries: list[dict]) -> None:
-        """Attach per-file tail-key row counts (schedule.tail_key_rows) to
-        freshly-compacted pending file stats — one aggregate job per
-        COMPACTION, amortized over every subsequent round's head-file
-        pruning (it removes select_head_files' only conservatism). Entries
-        are matched by data-file basename, so relative manifest paths and
-        absolute scratch paths both work."""
-        if not self._heads_sched or not entries:
-            return
-        try:
-            tails = tail_key_rows(self.spark, path, self._key_col)
-        except Exception:
-            return
-        for e in entries:
-            n = tails.get(os.path.basename(e["file"]))
-            if n is not None:
-                e["tail_rows"] = n
-
-    # -- stats-pruned frontier-heads scheduling -------------------------
-    def _file_stats(self, path: str) -> list[dict] | None:
-        """File stats for an immutable base part, cached. When the base
-        IS the latest snapshot's pending table, the entries come straight
-        from the icelite MANIFEST (Iceberg's scan planning — no file
-        access at all); scratch compactions between snapshots fall back
-        to reading the local parquet footers (same metadata, no Spark
-        job)."""
-        if path not in self._fstats_cache:
-            entries = None
-            try:
-                snap = self.catalog.latest()
-                if snap is not None and self.catalog.paths(snap, "pending") == [path]:
-                    fs = self.catalog.files(snap, "pending")
-                    if fs:
-                        entries = [
-                            {**f, "file": os.path.join(self.catalog.root, f["file"])}
-                            for f in fs
-                        ]
-            except Exception:
-                entries = None
-            if entries is None:
-                try:
-                    entries = scan_parquet_stats(path)
-                except Exception:
-                    entries = None
-            self._fstats_cache[path] = entries
-        return self._fstats_cache[path]
 
     def _heads_budget(self) -> int:
         return self.config.per_domain_quota * self._heads_refresh_rounds
 
     def _rebuild_heads(self) -> None:
-        """(Re)build the HEADS table: each politeness key's B lowest-seq
-        SURVIVING pending rows (one full-frontier top-B pass — the salted
-        two-phase window schedule_round uses for K>1, so hot keys never
-        funnel one partition). Runs at most once per refresh window and
-        after any pending-base rewrite, so its O(frontier) cost is
-        amortized 1/refresh per tick while every tick's scan is
-        O(#keys × B)."""
+        """(Re)build the HEADS table: each politeness key's first B
+        SURVIVING pending rows in schedule order (one full-frontier top-B
+        pass — the salted two-phase window schedule_round uses for K>1,
+        so hot keys never funnel one partition). Runs at most once per
+        refresh window and after any pending-base rewrite, so its
+        O(frontier) cost is amortized 1/refresh per tick while every
+        tick's scan is O(#keys × B)."""
         self._heads_df = self._mat_state(
-            schedule_round(self.pending, self._heads_budget(), self._key_col),
+            schedule_round(
+                self.pending, self._heads_budget(), self._key_col,
+                order_col=self._priority_col,
+            ),
             "heads",
             single=False,
         )
         self._heads_popped_idx = len(self._state_parts.get("popped", []))
         self._heads_pending_idx = len(self._state_parts.get("pending", []))
 
-    def _heads_for_schedule(self) -> tuple[DataFrame, dict]:
-        """Table-mode schedule source: HEADS ∪ admission-deltas-since-
-        build, minus tombstones-since-build. Correctness: pops remove at
-        most quota rows per key per popped part, so while
-        (parts_since + 1) × quota ≤ B every key's surviving top-quota is
-        within its B build-time heads (∪ the deltas) — past that bound
-        the table is rebuilt first. A key with fewer than B rows at
-        build time had ALL of them in HEADS, so drained keys terminate
-        identically to the full scan."""
+    def _pending_for_schedule(self) -> tuple[DataFrame, dict]:
+        """The frame schedule_round scans this round: HEADS ∪ admission-
+        deltas-since-build, minus tombstones-since-build. Returns (frame,
+        telemetry). Correctness: pops remove at most quota rows per key
+        per popped part, so while (parts_since + 1) × quota ≤ B every
+        key's surviving top-quota is within its B build-time heads (∪ the
+        deltas) — past that bound the table is rebuilt first. This holds
+        for any fixed per-row order, FIFO or priority. A key with fewer
+        than B rows at build time had ALL of them in HEADS, so drained
+        keys terminate identically to the full scan."""
         popped = self._state_parts.get("popped", [])
         p_since = len(popped) - self._heads_popped_idx
         if (
@@ -715,61 +599,14 @@ class CrawlEngine:
         total = max(self._pending_rows_estimate(), scanned)
         telemetry = {
             "mode": "table",
-            # parts, not data files, in table mode: the base parts are
-            # never opened at all — every one counts as pruned
+            # parts, not data files: the base parts are never opened at
+            # all — every one counts as pruned
             "files_scanned": 1 + len(deltas),
             "files_pruned": self._heads_pending_idx,
             "base_rows_scanned": scanned,
             "base_rows_total": total,
         }
         return frame, telemetry
-
-    def _pending_for_schedule(self) -> tuple[DataFrame, dict | None]:
-        """The frame schedule_round scans this round. When the pending
-        base is the sorted compacted layout, prune it to per-key head
-        files via footer/manifest bounds (select_head_files): tombstones
-        since compaction can invalidate at most K rows per key per popped
-        part, so a budget of K·(popped_parts+1) rows per key keeps every
-        key's surviving top-K readable. Falls back to the full frontier
-        whenever the invariants don't hold. Returns (frame, telemetry).
-
-        ``heads_mode="table"`` routes to the per-key HEADS table instead
-        (O(#keys × B) per tick independent of frontier depth AND file
-        count — the many-keys regime where footer pruning disengages)."""
-        if self._heads_mode == "table":
-            return self._heads_for_schedule()
-        parts = self._state_parts.get("pending", [])
-        if (
-            not self._heads_sched
-            or self._sorted_base is None
-            or self._sorted_base not in parts
-        ):
-            return self.pending, None
-        entries = self._file_stats(self._sorted_base)
-        if not entries:
-            return self.pending, None
-        popped_parts = len(self._state_parts.get("popped", []))
-        budget = self.config.per_domain_quota * (popped_parts + 1)
-        sel = select_head_files(entries, self._key_col, budget)
-        if sel is None:
-            return self.pending, None
-        kept, pruned = sel
-        deltas = [p for p in parts if p != self._sorted_base]
-        paths = [e["file"] for e in kept] + deltas
-        base = self.spark.read.parquet(*paths)
-        tombs = self._state_parts.get("popped")
-        if tombs:
-            t = self.spark.read.parquet(*tombs).select("url_hash")
-            base = base.join(t, "url_hash", "left_anti")
-        kept_rows = sum(e["rows"] for e in kept)
-        pruned_rows = sum(e["rows"] for e in pruned)
-        telemetry = {
-            "files_scanned": len(kept) + len(deltas),
-            "files_pruned": len(pruned),
-            "base_rows_scanned": kept_rows,
-            "base_rows_total": kept_rows + pruned_rows,
-        }
-        return base, telemetry
 
     # -- opt-in robots Crawl-delay pacing ------------------------------
     def _delay_rules_count(self) -> int:
@@ -966,10 +803,6 @@ class CrawlEngine:
         if snap is not None:
             self._state_parts["pending"] = self.catalog.paths(snap, "pending")
             self._state_parts["popped"] = []
-            # snapshot pending was committed in the sorted layout — heads
-            # scheduling resumes with it immediately
-            pp = self._state_parts["pending"]
-            self._sorted_base = pp[0] if len(pp) == 1 else None
             self.rules = (
                 self.catalog.load(self.spark, snap, "rules") or self._empty(RULES_SCHEMA)
             )
@@ -1030,15 +863,9 @@ class CrawlEngine:
 
     def start_from_frontier(self, pending: DataFrame, rules: DataFrame, next_seq: int) -> None:
         """Bulk-load a pre-built pending frontier (bench / resume-from-
-        external): all robots rules pre-parsed, empty memories. The load
-        writes the sorted compacted layout so heads scheduling prunes
-        from round 1."""
+        external): all robots rules pre-parsed, empty memories."""
         self.round_no = 0
         self._append_state_delta(pending, "pending", single=False)
-        # force-compact: rewrites the load into the sorted layout with the
-        # row-scaled file count (footer counts are readable only after the
-        # first write)
-        self._compact_pending(force=True)
         self.rules = rules
         self._n_delay_rules = None
         self._delay_rounds_cache = None
@@ -1056,9 +883,9 @@ class CrawlEngine:
         disable it when the domain count exceeds the budget."""
         rows = (
             self.rules.select("registered_domain").distinct()
-            .limit(self._known_doms_limit + 1).collect()
+            .limit(KNOWN_DOMAINS_CACHE_LIMIT + 1).collect()
         )
-        if len(rows) > self._known_doms_limit:
+        if len(rows) > KNOWN_DOMAINS_CACHE_LIMIT:
             self._known_doms = None
         else:
             self._known_doms = {r[0] for r in rows}
@@ -1165,7 +992,7 @@ class CrawlEngine:
                     for r in res.new_rules.select("registered_domain")
                     .distinct().collect()
                 }
-                if len(self._known_doms) > self._known_doms_limit:
+                if len(self._known_doms) > KNOWN_DOMAINS_CACHE_LIMIT:
                     self._known_doms = None
         try:
             if self.bloom is not None:
@@ -1186,17 +1013,12 @@ class CrawlEngine:
         if getattr(self, "_rules_dirty", True):
             self.rules = self._mat_state(self.rules, "rules", single=True)
             self._rules_dirty = False
-        if len(self._state_parts.get("popped", [])) >= int(
-            self.config.extra.get("pending_compact_parts", 64)
-        ):
+        if len(self._state_parts.get("popped", [])) >= PENDING_COMPACT_PARTS:
             self._compact_pending()
 
     def _commit_snapshot(self) -> None:
-        # snapshot pending in the sorted range-partitioned layout (tight
-        # per-file manifest bounds; see _sorted_layout)
-        pending_sorted = self._sorted_layout(self.pending)
         tables: dict = {
-            "pending": pending_sorted,
+            "pending": self.pending,
             "rules": self.rules,
             "completed": list(self._state_parts.get("completed", [])),
             "bad": list(self._state_parts.get("bad", [])),
@@ -1233,23 +1055,13 @@ class CrawlEngine:
                     for r in self.stats.rounds[-self.checkpoint_interval :]
                 ],
             },
-            file_annotators=(
-                {"pending": self._annotate_tail_stats} if self._heads_sched else None
-            ),
         )
         # the committed pending is a clean full table → adopt it as the
         # compacted base and drop the tombstones it folded in
         self._state_parts["pending"] = self.catalog.paths(snap, "pending")
         self._state_parts["popped"] = []
-        pp = self._state_parts["pending"]
-        self._sorted_base = pp[0] if len(pp) == 1 else None
         # parts list rewritten → stale HEADS-table indexes; rebuild lazily
         self._heads_df = None
-        # drop stats of superseded bases (the new base's entries load
-        # lazily from the snapshot manifest on first use)
-        self._fstats_cache = {
-            k: v for k, v in self._fstats_cache.items() if k == self._sorted_base
-        }
         # snapshot maintenance: bounded history when configured (the
         # adopted base above is the NEW snapshot's — always survives)
         keep = self.config.extra.get("snapshot_keep_last")
@@ -1327,7 +1139,7 @@ class CrawlEngine:
             hits = (
                 BAD.similarity_hits(
                     rest, self.bad, cfg.jaccard_threshold, cfg.jaccard_similar_count,
-                    broadcast_bad=self._n_bad_total <= self._broadcast_bad_limit,
+                    broadcast_bad=self._n_bad_total <= BROADCAST_BAD_LIMIT,
                 )
                 .groupBy("url")
                 .agg(

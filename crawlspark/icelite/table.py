@@ -45,8 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 # manifest column stats: per-file min/max for these columns when present
-# (Iceberg's lower/upper bounds) — the pruning surface a stats-aware
-# scheduler reads (per-domain frontier heads; host for netloc politeness)
+# (Iceberg's lower/upper bounds) — the pruning surface prune_files reads
 STATS_COLS = ("discovery_seq", "registered_domain", "host", "url_hash", "depth")
 
 # two-level manifests (Iceberg's manifest-list → manifest structure):
@@ -404,7 +403,6 @@ class IceliteCatalog:
         dfs: dict[str, "DataFrame | list[str] | None"],
         meta: dict[str, Any],
         partition_by: dict[str, list[str]] | None = None,
-        file_annotators: dict[str, Any] | None = None,
         schemas: dict[str, Any] | None = None,
         stats_cols: dict[str, list[str]] | None = None,
     ) -> Snapshot:
@@ -412,13 +410,6 @@ class IceliteCatalog:
         or a list of existing parquet dirs (append-only tables committed BY
         REFERENCE — Iceberg's append commit: the manifest lists the data
         files, nothing is rewritten).
-
-        ``file_annotators``: optional per-table callables
-        ``(data_dir_path, file_entries) -> None`` run after the table's
-        data files are written and scanned, before the manifest is
-        written — they may add extra per-file stats fields (e.g. the
-        heads scheduler's ``tail_rows``). Entries' ``file`` values are
-        catalog-relative at this point.
 
         Schema evolution: DataFrame tables record ``df.schema`` in the
         manifest; by-reference tables record the StructType passed in
@@ -517,7 +508,7 @@ class IceliteCatalog:
                 rels = [os.path.relpath(p, self.root) for p in df]
                 # footer-scan reuse: parquet parts are immutable, so dirs
                 # the parent snapshot already scanned keep their recorded
-                # entries (incl. inherited seq / annotations) — an append
+                # entries (incl. inherited seq) — an append
                 # commit's footer I/O is O(new dirs), not O(table)
                 prev_by_dir: dict[str, list[dict[str, Any]]] = {}
                 if parent is not None and name in parent.tables:
@@ -567,9 +558,6 @@ class IceliteCatalog:
                 writer.parquet(path)
                 files = _scan(path, name)
                 _assign_seq(name, files)
-                ann = (file_annotators or {}).get(name)
-                if ann is not None and files:
-                    ann(path, files)
                 rows, unknown = _rows_total(files)
                 # a DataFrame commit REWRITES the table: the caller
                 # materialized current state (deletes applied on load),

@@ -1,7 +1,8 @@
 """Partition-local bloom membership filter for the URL-seen set.
 
 north_rule: "URL canonicalization + 64-bit hashing feeding a
-partition-local bloom/cuckoo URL-seen filter". Semantics contract
+partition-local bloom/cuckoo URL-seen filter" — the engine ships the
+bloom filter, opt-in via ``extra["use_bloom"]``. Semantics contract
 (SURVEY.md §2.5): the filter is an OPTIMIZATION — a fast probabilistic
 reject in front of the exact anti-join. No false negatives ever (a key
 that was added always probes positive), so candidates that probe
@@ -22,8 +23,6 @@ smaller; the math is the same.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -62,184 +61,6 @@ def _probe_blob(keys: np.ndarray, blob: bytes, m_bits: int, k: int) -> np.ndarra
     pos = _probe_positions(keys, m_bits, k)
     hit = (bits[pos // 8] >> (pos % 8).astype(np.uint8)) & 1
     return hit.all(axis=1)
-
-
-class CuckooSeenFilter:
-    """Bucketed cuckoo filter over url_hash keys — the north_rule's
-    second membership option. Same DataFrame-state API and exactness
-    contract as BloomSeenFilter (NO false negatives ever), different
-    trade-off: ~12 bits/key at FPR ≈ 2·4/2^16 ≈ 1e-4 (16-bit
-    fingerprints, 4-way cells) and mergeable by entry re-insertion.
-
-    Layout per hash bucket: a (n_cells × 4) uint16 fingerprint table.
-    fp = 16 bits of the key (never 0); home cell i1 = a MULTIPLICATIVE
-    hash of the key mod n_cells — NOT key mod n_cells, which aliases with
-    the bucket key pmod(key, n_buckets): within one bucket all keys share
-    key mod n_buckets, so a plain modulus reaches only n_cells/n_buckets
-    home cells and the table overflows at a fraction of design load
-    (ADVICE r2). Alternate i2 = i1 XOR (fp·0x5bd1e995) mod n_cells
-    (partial-key cuckoo). If an insert's kick chain overflows, the bucket
-    sets an ``overflow`` flag and probes answer True for everything in
-    it — the filter degrades to the exact anti-join instead of ever lying
-    negative."""
-
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int = 64, expected_keys_per_bucket: int = 200_000,
-                 load_factor: float = 0.84):
-        self.n_buckets = n_buckets
-        cells = int(expected_keys_per_bucket / (4 * load_factor)) + 1
-        # power-of-two cells so the XOR alternate stays in range
-        self.n_cells = 1 << max(4, (cells - 1).bit_length())
-
-    def bucket_col(self, key):
-        return F.pmod(key, F.lit(self.n_buckets)).cast("int")
-
-    # -- table ops (numpy, driver/executor-side) -----------------------
-    def _fp(self, keys: np.ndarray) -> np.ndarray:
-        fp = ((keys.astype(np.uint64) >> np.uint64(32)) & np.uint64(0xFFFF)).astype(np.uint16)
-        fp[fp == 0] = 1
-        return fp
-
-    def _i1(self, keys: np.ndarray) -> np.ndarray:
-        # Fibonacci-multiplicative mix so home cells spread over the whole
-        # table independently of the bucket modulus (see class docstring)
-        mixed = keys.astype(np.uint64) * np.uint64(0x9E3779B97F4A7C15)
-        return ((mixed >> np.uint64(17)) % np.uint64(self.n_cells)).astype(np.int64)
-
-    def _alt(self, cell: np.ndarray, fp: np.ndarray) -> np.ndarray:
-        h = (fp.astype(np.uint64) * np.uint64(0x5BD1E995)) % np.uint64(self.n_cells)
-        return (cell.astype(np.uint64) ^ h).astype(np.int64) % self.n_cells
-
-    def _insert_entries(self, table: np.ndarray, cells: np.ndarray,
-                        fps: np.ndarray) -> bool:
-        """Insert (home-or-current cell, fp) entries; False on overflow."""
-        import random
-
-        rng = random.Random(0xC0FFEE)  # deterministic kick choices
-        for cell, fp in zip(cells.tolist(), fps.tolist()):
-            placed = False
-            for c in (cell, int(self._alt(np.array([cell]), np.array([fp], dtype=np.uint16))[0])):
-                empty = np.nonzero(table[c] == 0)[0]
-                if len(empty):
-                    table[c, empty[0]] = fp
-                    placed = True
-                    break
-            if placed:
-                continue
-            cur_cell, cur_fp = cell, fp
-            for _ in range(self.MAX_KICKS):
-                slot = rng.randrange(4)
-                cur_fp, table[cur_cell, slot] = int(table[cur_cell, slot]), cur_fp
-                cur_cell = int(
-                    self._alt(np.array([cur_cell]), np.array([cur_fp], dtype=np.uint16))[0]
-                )
-                empty = np.nonzero(table[cur_cell] == 0)[0]
-                if len(empty):
-                    table[cur_cell, empty[0]] = cur_fp
-                    break
-            else:
-                return False
-        return True
-
-    def _build_table(self, keys: np.ndarray) -> tuple[bytes, bool]:
-        table = np.zeros((self.n_cells, 4), dtype=np.uint16)
-        ok = self._insert_entries(table, self._i1(keys), self._fp(keys))
-        return table.tobytes(), not ok
-
-    # -- DataFrame API (mirrors BloomSeenFilter) ------------------------
-    def build(self, keys: DataFrame, key_col: str = "url_hash") -> DataFrame:
-        n_cells = self.n_cells
-        self_ref = self
-
-        def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            keys_np = pdf[key_col].to_numpy(dtype=np.int64)
-            blob, overflow = self_ref._build_table(keys_np)
-            # overflow encoded as n_items = -1 (probe → all True)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["_bucket"].iloc[0])],
-                    "filter": [blob],
-                    "n_items": [-1 if overflow else len(keys_np)],
-                }
-            )
-
-        bucketed = keys.select(
-            F.col(key_col), self.bucket_col(F.col(key_col)).alias("_bucket")
-        )
-        return bucketed.groupBy("_bucket").applyInPandas(per_bucket, FILTER_SCHEMA)
-
-    def merge(self, state: DataFrame, delta: DataFrame) -> DataFrame:
-        """Entry-wise re-insertion of the delta tables into the state
-        tables (cuckoo entries carry their current cell, which is always
-        home or alternate — re-inserting at that cell preserves lookup)."""
-        both = state.unionByName(delta)
-        self_ref = self
-        n_cells = self.n_cells
-
-        def cmerge(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc: np.ndarray | None = None
-            n = 0
-            overflow = False
-            for blob, cnt in zip(pdf["filter"], pdf["n_items"]):
-                t = np.frombuffer(bytes(blob), dtype=np.uint16).reshape(n_cells, 4)
-                if int(cnt) < 0:
-                    overflow = True
-                if acc is None:
-                    acc = t.copy()
-                else:
-                    cells, slots = np.nonzero(t)
-                    if not self_ref._insert_entries(acc, cells, t[cells, slots]):
-                        overflow = True
-                n += max(int(cnt), 0)
-            return pd.DataFrame(
-                {
-                    "bucket": [int(pdf["bucket"].iloc[0])],
-                    "filter": [acc.tobytes()],
-                    "n_items": [-1 if overflow else n],
-                }
-            )
-
-        return both.groupBy("bucket").applyInPandas(cmerge, FILTER_SCHEMA)
-
-    def probe(self, candidates: DataFrame, filters: DataFrame,
-              key_col: str = "url_hash") -> DataFrame:
-        n_cells = self.n_cells
-        self_ref = self
-        out_schema = T.StructType(
-            [T.StructField(key_col, T.LongType()), T.StructField("maybe_seen", T.BooleanType())]
-        )
-
-        def per_bucket(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            keys_np = left[key_col].to_numpy(dtype=np.int64)
-            if right.empty:
-                return pd.DataFrame(
-                    {key_col: keys_np, "maybe_seen": np.zeros(len(keys_np), dtype=bool)}
-                )
-            seen = np.zeros(len(keys_np), dtype=bool)
-            for blob, cnt in zip(right["filter"], right["n_items"]):
-                if blob is None:
-                    continue
-                if int(cnt) < 0:  # overflow bucket: never answer negative
-                    seen[:] = True
-                    break
-                t = np.frombuffer(bytes(blob), dtype=np.uint16).reshape(n_cells, 4)
-                fp = self_ref._fp(keys_np)
-                i1 = self_ref._i1(keys_np)
-                i2 = self_ref._alt(i1, fp)
-                hit = (t[i1] == fp[:, None]).any(axis=1) | (t[i2] == fp[:, None]).any(axis=1)
-                seen |= hit
-            return pd.DataFrame({key_col: keys_np, "maybe_seen": seen})
-
-        cand = candidates.select(
-            F.col(key_col), self.bucket_col(F.col(key_col)).alias("bucket")
-        )
-        verdict = (
-            cand.groupBy("bucket")
-            .cogroup(filters.groupBy("bucket"))
-            .applyInPandas(per_bucket, out_schema)
-        )
-        return candidates.join(verdict, key_col, "left").fillna({"maybe_seen": True})
 
 
 class BloomSeenFilter:

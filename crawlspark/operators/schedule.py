@@ -100,99 +100,6 @@ def schedule_round(
     )
 
 
-def tail_key_rows(spark, path: str, key_col: str = "registered_domain") -> dict[str, int]:
-    """Per-file row count of each data file's MAXIMUM politeness-key
-    value, for the sorted compacted pending layout. One distributed
-    aggregate (map-side partial → O(#files·keys-per-file) shuffle rows,
-    O(#files) collected) run once per COMPACTION — it removes the heads
-    scheduler's only conservatism: after a mixed file, the walker knows
-    exactly how many of the tail key's head rows it already kept, so
-    pure-continuation files prune immediately instead of one file late.
-    Keys are data-file basenames (task-UUID parquet names, unique)."""
-    from pyspark.sql import Window as _W
-
-    per = (
-        spark.read.parquet(path)
-        .select(F.input_file_name().alias("_f"), F.col(key_col).alias("_k"))
-        .groupBy("_f", "_k")
-        .agg(F.count(F.lit(1)).alias("_n"))
-    )
-    tails = (
-        per.withColumn("_mk", F.max("_k").over(_W.partitionBy("_f")))
-        .filter(F.col("_k") == F.col("_mk"))
-        .select("_f", "_n")
-        .collect()
-    )
-    import os as _os
-
-    return {_os.path.basename(r["_f"]): int(r["_n"]) for r in tails}
-
-
-def select_head_files(
-    entries: list[dict], key_col: str = "registered_domain", budget: int = 1,
-) -> tuple[list[dict], list[dict]] | None:
-    """Stats-pruned frontier-heads scan planning (the north_rule's
-    O(#domains)-per-tick scheduler; VERDICT r2 #1).
-
-    ``entries`` are manifest/footer file stats for the COMPACTED pending
-    layout — range-partitioned and sorted on (key_col, discovery_seq), so
-    per-file (key, seq) tuple ranges are disjoint and each file carries
-    tight [min, max] bounds for both columns. ``budget`` is the number of
-    lowest-seq rows per key that must remain readable: tombstones appended
-    since compaction can invalidate at most (rounds-since-compaction × K)
-    head rows per key, so the caller passes that bound + K and the
-    selected files are guaranteed to contain every key's surviving top-K.
-
-    Rule: a file is prunable iff it is a PURE CONTINUATION — its key range
-    is a single key that also ends the previous file's range (so the key's
-    head lies strictly earlier) — and at least ``budget`` rows of that key
-    have already been kept from earlier single-key files. Mixed files are
-    always kept (they contain some key's head); files without bounds or
-    row counts abort pruning entirely (return None → caller full-scans).
-
-    Returns (kept_entries, pruned_entries)."""
-    prepared = []
-    for e in entries:
-        b = e.get("bounds") or {}
-        kb, sb = b.get(key_col), b.get("discovery_seq")
-        if kb is None or sb is None or e.get("rows") is None:
-            return None  # never prune blind
-        prepared.append((kb[0], sb[0], kb[1], e))
-    # Walk in the layout's RANGE order. The files are contiguous disjoint
-    # ranges in (key, seq) TUPLE space, so (k_hi, k_lo, s_lo) is a total
-    # order consistent with it: all pure-k files precede the mixed file
-    # that starts at k (its range begins above their tuples), and the
-    # mixed file ending at k' precedes k'-pure files. Sorting by k_lo/s_lo
-    # first would be wrong: discovery_seq interleaves across keys, so a
-    # mixed file's column-wise s_lo is polluted by its TAIL key's low
-    # seqs and can sort the file before the pure files of its head key.
-    prepared.sort(key=lambda t: (t[2], t[0], t[1]))
-
-    kept: list[dict] = []
-    pruned: list[dict] = []
-    run_key = None   # key whose single-key run we are walking
-    run_rows = 0     # rows of run_key confirmed kept from single-key files
-    prev_hi = None
-    for k_lo, _s_lo, k_hi, e in prepared:
-        single = k_lo == k_hi
-        if single and k_lo == prev_hi and run_key == k_lo and run_rows >= budget:
-            pruned.append(e)
-            prev_hi = k_hi
-            continue
-        kept.append(e)
-        if single:
-            run_rows = run_rows + e["rows"] if run_key == k_lo else e["rows"]
-            run_key = k_lo
-        else:
-            # mixed file ending in k_hi: when the compaction recorded the
-            # file's tail-key row count (tail_rows), the walker starts the
-            # run with the exact head rows already kept; without it, 0 —
-            # the conservative "+1 continuation file" behavior
-            run_key, run_rows = k_hi, int(e.get("tail_rows") or 0)
-        prev_hi = k_hi
-    return kept, pruned
-
-
 # ---------------------------------------------------------------------------
 # adaptive recrawl scheduling (change-rate-driven revisit intervals)
 # ---------------------------------------------------------------------------

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for the crawl engine.
 
-Local-mode defaults sized for the sandbox (single JVM, 32 threads); on a
-real cluster the same builder is driven by spark-submit conf instead.
+Local-mode defaults: one JVM with one task thread per CPU this process
+may run on (``SPARK_GRAFT_CPUS`` overrides); on a real cluster the same
+builder is driven by spark-submit conf instead.
 """
 
 from __future__ import annotations
@@ -9,6 +10,14 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_mem() -> str:
+    """Half the machine's RAM, at most 48g: a driver heap allowed more
+    than the machine holds grows in a long session until the kernel
+    kills the JVM."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48, max(1, total // 2**31))}g"
 
 
 def get_spark(
@@ -23,7 +32,7 @@ def get_spark(
     pandas-UDF), small Arrow batches so image ``bytes`` columns don't blow
     up a single Arrow batch (SURVEY.md §4.3.5).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism, not the 200 default — local shuffles are
@@ -43,7 +52,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Scan split size (guide §6): the sandbox tables are single

@@ -44,8 +44,7 @@ def main() -> None:
     ap.add_argument(
         "--extra", action="append", default=None, metavar="KEY=VALUE",
         help="engine extras (repeatable), e.g. politeness_key=netloc, "
-        "bucket_pages=true, fetch_mode=http, heads_scheduling=false, "
-        "pending_file_rows=1000000; values parse as JSON when possible",
+        "bucket_pages=true, fetch_mode=http; values parse as JSON when possible",
     )
     ap.add_argument("--master", default=None, help="override master (default local[$SPARK_GRAFT_CPUS])")
     ap.add_argument("--report", action="store_true", help="print the crawl report JSON at the end")

@@ -1,13 +1,15 @@
 #!/usr/bin/env python
-"""Heads-scheduler scan bench (VERDICT r2 #1 'Done' criterion): grow the
-frontier 10x at FIXED domain count and show schedule wall-time ~flat with
-per-round scanned-rows logged — the stats-pruned scan is O(#domains x
-file_rows), the full scan is O(frontier).
+"""Schedule-scan bench: grow the frontier 10x at a FIXED key count and
+time the schedule step (HEADS table ∪ deltas − tombstones, then the
+quota window) per round, with the rows each tick read. The tick reads
+O(#keys × B) rows, so its time should stay ~flat as the frontier grows;
+the HEADS rebuild (one frontier pass per refresh window) is included in
+the tick that runs it.
 
 Usage: python scripts/bench_heads_scan.py [small] [big] [n_domains] [rounds]
-Defaults: 1M -> 10M rows, 24 domains, 4 rounds, local[32].
+Defaults: 1M -> 10M rows, 24 domains, 4 rounds, local[<cpus>].
 Env: HEADS_BENCH_KEY=registered_domain|netloc (politeness key),
-     HEADS_BENCH_QUOTA=K (per-key quota; budget math is K-dependent),
+     HEADS_BENCH_QUOTA=K (per-key quota),
      HEADS_BENCH_OUT=<json path>.
 """
 
@@ -25,12 +27,12 @@ from crawlspark import benchcorpus as BC
 from crawlspark.config import CrawlConfig
 from crawlspark.engine import CrawlEngine
 from crawlspark.operators.robots import parse_robots
+from crawlspark.operators.schedule import schedule_round
 from crawlspark.session import get_spark
 
 
-def run(spark, n_pages: int, n_domains: int, rounds: int, heads: bool,
-        key: str = "registered_domain", quota: int = 1,
-        mode: str = "scan") -> dict:
+def run(spark, n_pages: int, n_domains: int, rounds: int,
+        key: str = "registered_domain", quota: int = 1) -> dict:
     pages = BC.build_pages(spark, min(n_pages, 200_000), n_domains).persist()
     pages.count()
     frontier = BC.build_frontier(spark, n_pages, n_domains)
@@ -38,14 +40,7 @@ def run(spark, n_pages: int, n_domains: int, rounds: int, heads: bool,
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
         per_domain_quota=quota,
-        extra={
-            "heads_scheduling": heads,
-            "heads_mode": mode,
-            "politeness_key": key,
-            # 100k-row files: the heads scan reads ~#domains files while
-            # the file COUNT (not size) grows with the frontier
-            "pending_file_rows": 100_000,
-        },
+        extra={"politeness_key": key},
     )
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="headsbench_"),
@@ -53,17 +48,14 @@ def run(spark, n_pages: int, n_domains: int, rounds: int, heads: bool,
         sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
     )
     eng.start_from_frontier(frontier, parse_robots(robots), next_seq=n_pages)
-    # timed window: schedule-only wall time isn't separable from the round
-    # DAG, so time the schedule step explicitly per round
-    from crawlspark.operators.schedule import schedule_round
-
+    # the schedule step isn't separable from the round DAG, so time it
+    # explicitly before each round
     sched_secs = []
     scans = []
     for _ in range(rounds):
         t0 = time.monotonic()
         src, scan = eng._pending_for_schedule()
-        batch = schedule_round(src, cfg.per_domain_quota, eng._key_col)
-        n = batch.count()
+        schedule_round(src, cfg.per_domain_quota, eng._key_col).count()
         sched_secs.append(time.monotonic() - t0)
         scans.append(scan)
         if not eng.run_round():  # advance state (pops + tombstones)
@@ -71,8 +63,6 @@ def run(spark, n_pages: int, n_domains: int, rounds: int, heads: bool,
     pages.unpersist()
     return {
         "n_pages": n_pages,
-        "heads": heads,
-        "mode": mode,
         "sched_secs": [round(s, 2) for s in sched_secs],
         "sched_sec_median": round(sorted(sched_secs)[len(sched_secs) // 2], 2),
         "scans": scans,
@@ -84,37 +74,20 @@ def main() -> None:
     big = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
     n_domains = int(sys.argv[3]) if len(sys.argv) > 3 else 24
     rounds = int(sys.argv[4]) if len(sys.argv) > 4 else 4
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     key = os.environ.get("HEADS_BENCH_KEY", "registered_domain")
     quota = int(os.environ.get("HEADS_BENCH_QUOTA", "1"))
-    spark = get_spark("heads-bench", master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark = get_spark("heads-bench")
 
     out = {
         "n_domains": n_domains, "rounds": rounds,
         "politeness_key": key, "quota": quota,
     }
-    mode = os.environ.get("HEADS_BENCH_MODE", "scan")
-    out["mode"] = mode
-    for label, n, heads in [
-        ("small_heads", small, True),
-        ("big_heads", big, True),
-        ("small_fullscan", small, False),
-        ("big_fullscan", big, False),
-    ]:
-        # "heads" legs take the benched mode: footer-stat pruning
-        # (mode=scan) or the per-key HEADS table (mode=table)
-        out[label] = run(
-            spark, n, n_domains, rounds, heads, key=key, quota=quota,
-            mode=(mode if heads else "scan"),
-        )
+    for label, n in [("small", small), ("big", big)]:
+        out[label] = run(spark, n, n_domains, rounds, key=key, quota=quota)
         print(f"# {label}: median sched {out[label]['sched_sec_median']}s", flush=True)
-    out["sched_growth_10x_frontier_heads"] = round(
-        out["big_heads"]["sched_sec_median"]
-        / max(out["small_heads"]["sched_sec_median"], 1e-9), 2,
-    )
-    out["sched_growth_10x_frontier_fullscan"] = round(
-        out["big_fullscan"]["sched_sec_median"]
-        / max(out["small_fullscan"]["sched_sec_median"], 1e-9), 2,
+    out["sched_growth_10x_frontier"] = round(
+        out["big"]["sched_sec_median"]
+        / max(out["small"]["sched_sec_median"], 1e-9), 2,
     )
     dest = os.environ.get("HEADS_BENCH_OUT")
     if dest:

@@ -106,7 +106,7 @@ def test_crawl_identical_past_broadcast_budget(spark):
     the exact same frontier as the broadcast path."""
     from test_heads_schedule import _run_crawl
 
-    _, rows_bc = _run_crawl(spark, heads=True, quota=1, rounds=4)
+    _, rows_bc = _run_crawl(spark, quota=1, rounds=4)
     import tempfile
 
     from crawlspark import benchcorpus as BC
@@ -120,11 +120,7 @@ def test_crawl_identical_past_broadcast_budget(spark):
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
         per_domain_quota=1,
-        extra={
-            "heads_scheduling": True,
-            "pending_file_rows": 200,
-            "batch_broadcast_limit": 0,  # force the shuffled-join path
-        },
+        extra={"batch_broadcast_limit": 0},  # force the shuffled-join path
     )
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="bcguard_"),

@@ -1,110 +1,54 @@
-"""Stats-pruned frontier-heads scheduling (VERDICT r2 #1): the schedule
-must read only per-key head files of the sorted compacted layout (plus
-deltas + tombstones) and still produce byte-identical crawls."""
+"""Per-key HEADS table scheduling: every round must schedule exactly the
+batch a full frontier scan would, across mid-crawl rebuilds, snapshot
+commits and crash + resume."""
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from crawlspark import benchcorpus as BC
 from crawlspark.config import CrawlConfig
 from crawlspark.engine import CrawlEngine
 from crawlspark.operators.robots import parse_robots
-from crawlspark.operators.schedule import select_head_files
+from crawlspark.operators.schedule import schedule_round
 
 
-def _entry(f, rows, d_lo, d_hi, s_lo, s_hi):
-    return {
-        "file": f, "rows": rows,
-        "bounds": {
-            "registered_domain": [d_lo, d_hi],
-            "discovery_seq": [s_lo, s_hi],
-        },
-    }
+def _urls(df) -> set[str]:
+    return {r["url"] for r in df.select("url").collect()}
 
 
-def test_select_head_files_unit():
-    # layout: f0 mixed (a..b), f1/f2/f3 pure-b continuations, f4 mixed (b..c)
-    entries = [
-        _entry("f0", 100, "a", "b", 0, 99),
-        _entry("f1", 100, "b", "b", 100, 199),
-        _entry("f2", 100, "b", "b", 200, 299),
-        _entry("f3", 100, "b", "b", 300, 399),
-        _entry("f4", 100, "b", "c", 400, 499),
-    ]
-    kept, pruned = select_head_files(entries, budget=1)
-    # f0 mixed → kept (holds a's and b's heads); f1 kept (first confirmed-b
-    # rows — f0 is mixed so its b-count is unknown); f2/f3 pruned once 100
-    # confirmed b-rows are covered; f4 mixed → kept (holds c's head)
-    assert [e["file"] for e in kept] == ["f0", "f1", "f4"]
-    assert [e["file"] for e in pruned] == ["f2", "f3"]
-
-    # a larger budget keeps more continuation rows readable
-    kept, pruned = select_head_files(entries, budget=150)
-    assert [e["file"] for e in kept] == ["f0", "f1", "f2", "f4"]
-
-    # missing bounds anywhere → no pruning at all (never prune blind)
-    broken = entries[:2] + [{"file": "fX", "rows": 10}]
-    assert select_head_files(broken, budget=1) is None
-
-    # rows=None (unreadable footer) also aborts
-    bad = [dict(e) for e in entries]
-    bad[2]["rows"] = None
-    assert select_head_files(bad, budget=1) is None
+N_PAGES, N_DOMAINS = 4000, 6
 
 
-def test_select_head_files_tail_stats_and_interleaved_seqs():
-    # discovery_seq interleaves across keys, so a mixed file's column-wise
-    # s_lo carries its TAIL key's low seqs — the walk must follow the
-    # tuple-range order (k_hi, k_lo, s_lo), or the mixed file mis-sorts
-    # ahead of its head key's pure files and the tail run is lost
-    entries = [
-        _entry("p00", 100, "a", "a", 2, 900),
-        _entry("p01", 100, "a", "a", 905, 2000),
-        _entry("p02", 100, "a", "b", 3, 2500),    # b's head inside; b seqs from 3
-        _entry("p03", 100, "b", "b", 40, 3000),
-        _entry("p04", 100, "b", "c", 1, 3500),    # c's head inside; c seqs from 1
-        _entry("p05", 100, "c", "c", 50, 4000),
-    ]
-    # with tail-key row counts (compaction stats): every pure continuation
-    # after a mixed file prunes — the scan is exactly the head files
-    for e, t in zip(entries, (100, 100, 30, 100, 25, 100)):
-        e["tail_rows"] = t
-    kept, pruned = select_head_files(entries, budget=1)
-    assert [e["file"] for e in kept] == ["p00", "p02", "p04"]
-    assert [e["file"] for e in pruned] == ["p01", "p03", "p05"]
-
-    # budget larger than the mixed file's confirmed tail rows → the next
-    # continuation stays readable
-    kept, _ = select_head_files(entries, budget=31)
-    assert [e["file"] for e in kept] == ["p00", "p02", "p03", "p04", "p05"]
-
-    # without tail stats: conservative (+1 continuation file per mixed
-    # file) but still correct under the range order
-    for e in entries:
-        del e["tail_rows"]
-    kept, pruned = select_head_files(entries, budget=1)
-    assert [e["file"] for e in kept] == ["p00", "p02", "p03", "p04", "p05"]
-    assert [e["file"] for e in pruned] == ["p01"]
+def _frontier(spark, priority_col: str | None = None):
+    frontier = BC.build_frontier(spark, N_PAGES, N_DOMAINS)
+    if priority_col == "depth":
+        # mixed depths, so the priority order differs from FIFO
+        frontier = frontier.withColumn(
+            "depth", F.pmod(F.col("discovery_seq") * 7919, F.lit(5)).cast("int")
+        )
+    return frontier
 
 
-def _run_crawl(spark, heads: bool, quota: int, rounds: int = 6,
+def _run_crawl(spark, quota: int, rounds: int = 6,
                politeness_key: str | None = None,
-               heads_mode: str | None = None,
-               heads_refresh_rounds: int | None = None):
-    n_pages, n_domains = 4000, 6
-    pages = BC.build_pages(spark, n_pages, n_domains)
-    frontier = BC.build_frontier(spark, n_pages, n_domains)
-    robots = BC.build_robots(spark, n_domains)
-    extra = {"heads_scheduling": heads, "pending_file_rows": 200}
+               refresh: int | None = None,
+               priority_col: str | None = None,
+               check_full_scan: bool = False):
+    """Crawl a bulk-loaded frontier. With ``check_full_scan`` every round's
+    scheduled batch is asserted equal to schedule_round over the whole
+    pending frontier as it stood before the round."""
+    pages = BC.build_pages(spark, N_PAGES, N_DOMAINS)
+    robots = BC.build_robots(spark, N_DOMAINS)
+    extra = {}
     if politeness_key:
         extra["politeness_key"] = politeness_key
-    if heads_mode:
-        extra["heads_mode"] = heads_mode
-    if heads_refresh_rounds:
-        extra["heads_refresh_rounds"] = heads_refresh_rounds
+    if priority_col:
+        extra["priority_col"] = priority_col
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
         per_domain_quota=quota,
@@ -115,10 +59,21 @@ def _run_crawl(spark, heads: bool, quota: int, rounds: int = 6,
         checkpoint_interval=3, pages=pages, robots_bodies=robots,
         sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
     )
-    eng.start_from_frontier(frontier, parse_robots(robots), next_seq=n_pages)
+    if refresh:
+        eng._heads_refresh_rounds = refresh
+    eng.start_from_frontier(
+        _frontier(spark, priority_col), parse_robots(robots), next_seq=N_PAGES
+    )
     for _ in range(rounds):
+        if check_full_scan:
+            want = _urls(
+                schedule_round(eng.pending, quota, eng._key_col, order_col=priority_col)
+            )
         if not eng.run_round():
             break
+        if check_full_scan:
+            sched = os.path.join(eng.scratch_dir, f"r{eng.round_no:06d}", "sched")
+            assert _urls(spark.read.parquet(sched)) == want, eng.round_no
     rows = {
         r["url"]: (r["status"], r["completed_round"], r["discovery_seq"])
         for r in eng.all_rows().select(
@@ -129,108 +84,32 @@ def _run_crawl(spark, heads: bool, quota: int, rounds: int = 6,
 
 
 @pytest.mark.parametrize(
-    "quota,key",
-    [(1, None), (2, None), (8, "netloc")],
+    "quota,key,refresh,priority_col",
+    [
+        pytest.param(1, None, 3, None, id="1-None-3"),
+        pytest.param(2, None, 2, None, id="2-None-2"),
+        pytest.param(8, "netloc", 3, None, id="8-netloc-3"),
+        pytest.param(2, None, 3, "depth", id="2-None-3-depth"),
+    ],
 )
-def test_heads_schedule_equals_full_scan(spark, quota, key):
-    """Same crawl with heads pruning ON vs OFF: identical per-URL status,
-    completion round and sequence — across compactions, snapshot commits
-    (interval 3) and accumulating tombstones (the budget logic). The
-    (8, netloc) cell exercises the K-dependent budget math on the
-    finer-grained politeness key (VERDICT r3 #7)."""
-    eng_on, rows_on = _run_crawl(spark, heads=True, quota=quota, politeness_key=key)
-    _, rows_off = _run_crawl(spark, heads=False, quota=quota, politeness_key=key)
-    assert rows_on == rows_off
-    # the pruned path must have actually run AND pruned on this layout
-    scans = [r.sched_scan for r in eng_on.stats.rounds if r.sched_scan]
-    assert scans, "heads scheduling never engaged"
-    assert any(s["files_pruned"] > 0 for s in scans), scans
-    assert all(
-        s["base_rows_scanned"] <= s["base_rows_total"] for s in scans
+def test_heads_table_equals_full_scan(spark, quota, key, refresh, priority_col):
+    """The HEADS table + admission deltas − tombstones must schedule each
+    round exactly like a full scan of the frontier, across mid-crawl
+    rebuilds (tiny refresh windows force several), snapshot commits
+    (interval 3 rewrites the parts list → invalidation), accumulating
+    tombstones and a priority order. The (8, netloc) cell exercises the
+    K-dependent budget math on the finer-grained politeness key."""
+    if priority_col:
+        f = _frontier(spark, priority_col)
+        assert _urls(schedule_round(f, quota, order_col=priority_col)) != _urls(
+            schedule_round(f, quota)
+        )
+    eng, _ = _run_crawl(
+        spark, quota, politeness_key=key, refresh=refresh,
+        priority_col=priority_col, check_full_scan=True,
     )
-    pruned_rounds = [s for s in scans if s["files_pruned"] > 0]
-    assert all(
-        s["base_rows_scanned"] < s["base_rows_total"] for s in pruned_rounds
-    )
-
-
-def test_heads_schedule_survives_resume(spark):
-    """A resumed engine picks up the snapshot's sorted layout and keeps
-    pruning; the crawl completes identically to an unbroken run."""
-    n_pages, n_domains = 3000, 5
-    pages = BC.build_pages(spark, n_pages, n_domains)
-    frontier = BC.build_frontier(spark, n_pages, n_domains)
-    robots = BC.build_robots(spark, n_domains)
-    rules = parse_robots(robots)
-    cfg = CrawlConfig(
-        allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
-        extra={"pending_file_rows": 200},
-    )
-    state = tempfile.mkdtemp(prefix="heads_resume_")
-
-    eng1 = CrawlEngine(
-        spark, cfg, None, state, checkpoint_interval=2, pages=pages,
-        robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
-    )
-    eng1.start_from_frontier(frontier, rules, next_seq=n_pages)
-    for _ in range(4):
-        eng1.run_round()
-    eng1._commit_snapshot()
-
-    eng2 = CrawlEngine(
-        spark, cfg, None, state, checkpoint_interval=2, pages=pages,
-        robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
-    )
-    eng2.start(resume=True)
-    assert eng2._sorted_base is not None
-
-    # snapshot-backed base: file stats must come from the icelite
-    # MANIFEST (Iceberg scan planning), not parquet footers — prove it by
-    # making the footer path explode
-    import crawlspark.engine as ENG
-
-    orig = ENG.scan_parquet_stats
-
-    def boom(path):
-        raise RuntimeError("footer scan must not run for snapshot-backed base")
-
-    ENG.scan_parquet_stats = boom
-    try:
-        entries = eng2._file_stats(eng2._sorted_base)
-    finally:
-        ENG.scan_parquet_stats = orig
-    assert entries and all(
-        "bounds" in e and e["rows"] is not None for e in entries
-    )
-    # the snapshot commit's file annotator recorded tail-key row counts,
-    # so exact (non-conservative) pruning survives resume too
-    assert all("tail_rows" in e for e in entries)
-
-    eng2.run_round()
-    scan = eng2.stats.rounds[-1].sched_scan
-    assert scan is not None and scan["files_pruned"] > 0
-
-
-@pytest.mark.parametrize(
-    "quota,key,refresh",
-    [(1, None, 3), (2, None, 2), (8, "netloc", 3)],
-)
-def test_heads_table_equals_full_scan(spark, quota, key, refresh):
-    """heads_mode='table' (VERDICT r4 #3 — the many-keys regime): the
-    per-key HEADS table + admission deltas − tombstones must schedule
-    byte-identically to the full scan, across mid-crawl rebuilds (tiny
-    refresh windows force several), snapshot commits (interval 3 rewrites
-    the parts list → invalidation) and accumulating tombstones."""
-    eng_on, rows_on = _run_crawl(
-        spark, heads=False, quota=quota, politeness_key=key,
-        heads_mode="table", heads_refresh_rounds=refresh,
-    )
-    _, rows_off = _run_crawl(spark, heads=False, quota=quota, politeness_key=key)
-    assert rows_on == rows_off
-    scans = [r.sched_scan for r in eng_on.stats.rounds if r.sched_scan]
-    assert scans and all(s.get("mode") == "table" for s in scans)
+    scans = [r.sched_scan for r in eng.stats.rounds]
+    assert len(scans) == 6 and all(s["mode"] == "table" for s in scans)
     # once the frontier is deeper than #keys × B, the tick must NOT have
     # scanned the whole frontier
     assert any(
@@ -239,9 +118,9 @@ def test_heads_table_equals_full_scan(spark, quota, key, refresh):
 
 
 def test_heads_table_survives_resume(spark):
-    """Crash + resume under heads_mode='table': the table is scratch-only
-    (never snapshot-carried) and must rebuild lazily on the first resumed
-    tick, completing the crawl identically to an unbroken run."""
+    """Crash + resume: the HEADS table is scratch-only (never
+    snapshot-carried) and must rebuild lazily on the first resumed tick,
+    completing the crawl identically to an unbroken run."""
     n_pages, n_domains = 3000, 5
     pages = BC.build_pages(spark, n_pages, n_domains)
     frontier = BC.build_frontier(spark, n_pages, n_domains)
@@ -249,18 +128,18 @@ def test_heads_table_survives_resume(spark):
     rules = parse_robots(robots)
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
-        extra={"pending_file_rows": 200, "heads_mode": "table",
-               "heads_refresh_rounds": 3},
     )
 
     def eng_for(state):
-        return CrawlEngine(
+        eng = CrawlEngine(
             spark, cfg, None, state, checkpoint_interval=2, pages=pages,
             robots_bodies=robots,
             sitemap_xml=spark.createDataFrame(
                 [], "registered_domain string, xml string"
             ),
         )
+        eng._heads_refresh_rounds = 3
+        return eng
 
     sa = tempfile.mkdtemp(prefix="headstab_a_")
     a = eng_for(sa)

@@ -34,83 +34,3 @@ def test_probe_with_empty_state(spark):
     cands = spark.range(10).select(F.col("id"), F.xxhash64("id").alias("url_hash"))
     res = bf.probe(cands, state).collect()
     assert all(not r["maybe_seen"] for r in res)
-
-
-def test_cuckoo_no_false_negatives_and_merge(spark):
-    from crawlspark.operators.membership import CuckooSeenFilter
-
-    cf = CuckooSeenFilter(n_buckets=8, expected_keys_per_bucket=2000)
-    seen1 = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
-    seen2 = spark.range(5000, 8000).select(F.xxhash64("id").alias("url_hash"))
-    state = cf.build(seen1)
-    state = cf.merge(state, cf.build(seen2))
-
-    cands = spark.range(0, 12000).select(
-        F.col("id"), F.xxhash64("id").alias("url_hash")
-    )
-    res = {r["id"]: r["maybe_seen"] for r in cf.probe(cands, state).collect()}
-    misses = [i for i in range(8000) if not res[i]]
-    assert not misses, misses[:5]  # the exactness contract
-    fp = sum(1 for i in range(8000, 12000) if res[i])
-    assert fp / 4000 < 0.01, fp  # 16-bit fingerprints: FPR ~1e-4
-
-
-def test_cuckoo_overflow_degrades_safely(spark):
-    """Past capacity the bucket flags overflow and probes answer True
-    for everything - it may stop filtering, it must never lie negative."""
-    from crawlspark.operators.membership import CuckooSeenFilter
-
-    cf = CuckooSeenFilter(n_buckets=1, expected_keys_per_bucket=32)
-    # way past capacity for 1 bucket
-    seen = spark.range(0, 5000).select(F.xxhash64("id").alias("url_hash"))
-    state = cf.build(seen)
-    cands = spark.range(0, 6000).select(F.col("id"), F.xxhash64("id").alias("url_hash"))
-    res = {r["id"]: r["maybe_seen"] for r in cf.probe(cands, state).collect()}
-    assert all(res[i] for i in range(5000))
-
-
-def test_cuckoo_probe_unmerged_state_plus_delta(spark):
-    """Probing a state UNION delta frame (two rows per bucket) must OR
-    the tables - the same caller contract the bloom filter honors."""
-    from crawlspark.operators.membership import CuckooSeenFilter
-
-    cf = CuckooSeenFilter(n_buckets=4, expected_keys_per_bucket=500)
-    s1 = cf.build(spark.range(0, 800).select(F.xxhash64("id").alias("url_hash")))
-    s2 = cf.build(spark.range(800, 1600).select(F.xxhash64("id").alias("url_hash")))
-    cands = spark.range(0, 1600).select(F.col("id"), F.xxhash64("id").alias("url_hash"))
-    res = {r["id"]: r["maybe_seen"] for r in cf.probe(cands, s1.unionByName(s2)).collect()}
-    assert all(res[i] for i in range(1600))
-
-
-import pytest
-
-
-@pytest.mark.slow
-def test_engine_with_cuckoo_matches_default(spark, tmp_path):
-    """Full-crawl equivalence: the cuckoo pre-filter must not change a
-    single frontier outcome (it only short-circuits definite-negatives)."""
-    from crawlspark import corpus as C
-    from crawlspark.config import CrawlConfig
-    from crawlspark.engine import CrawlEngine
-
-    d = str(tmp_path / "corpus")
-    C.write_corpus(d, C.CorpusSpec(n_pages=40, n_domains=6, seed=17))
-    a = CrawlEngine(
-        spark, CrawlConfig(allowed_url_patterns=C.ALLOWED_PATTERNS),
-        d, str(tmp_path / "sa"), checkpoint_interval=100,
-    )
-    a.start(resume=False)
-    a.run(max_rounds=5)
-    b = CrawlEngine(
-        spark,
-        CrawlConfig(
-            allowed_url_patterns=C.ALLOWED_PATTERNS,
-            extra={"seen_filter": "cuckoo", "bloom_keys_per_bucket": 1000},
-        ),
-        d, str(tmp_path / "sb"), checkpoint_interval=100,
-    )
-    b.start(resume=False)
-    b.run(max_rounds=5)
-    ea = {r["url"]: r["status"] for r in a.all_rows().select("url", "status").collect()}
-    eb = {r["url"]: r["status"] for r in b.all_rows().select("url", "status").collect()}
-    assert ea == eb
