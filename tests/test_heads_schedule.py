@@ -38,10 +38,13 @@ def _run_crawl(spark, quota: int, rounds: int = 6,
                politeness_key: str | None = None,
                refresh: int | None = None,
                priority_col: str | None = None,
-               check_full_scan: bool = False):
+               check_full_scan: bool = False,
+               full_scan_source: bool = False):
     """Crawl a bulk-loaded frontier. With ``check_full_scan`` every round's
     scheduled batch is asserted equal to schedule_round over the whole
-    pending frontier as it stood before the round."""
+    pending frontier as it stood before the round. ``full_scan_source``
+    bypasses the HEADS table: every round schedules straight from the
+    whole pending frontier (the reference crawl)."""
     pages = BC.build_pages(spark, N_PAGES, N_DOMAINS)
     robots = BC.build_robots(spark, N_DOMAINS)
     extra = {}
@@ -61,6 +64,8 @@ def _run_crawl(spark, quota: int, rounds: int = 6,
     )
     if refresh:
         eng._heads_refresh_rounds = refresh
+    if full_scan_source:
+        eng._pending_for_schedule = lambda: (eng.pending, None)
     eng.start_from_frontier(
         _frontier(spark, priority_col), parse_robots(robots), next_seq=N_PAGES
     )
@@ -81,6 +86,29 @@ def _run_crawl(spark, quota: int, rounds: int = 6,
         ).collect()
     }
     return eng, rows
+
+
+@pytest.mark.parametrize(
+    "quota,key",
+    [(1, None), (2, None), (8, "netloc")],
+)
+def test_heads_schedule_equals_full_scan(spark, quota, key):
+    """Same crawl scheduled from the HEADS table (default refresh window)
+    vs straight from the whole frontier: identical per-URL status,
+    completion round and sequence — across snapshot commits (interval 3)
+    and accumulating tombstones. The (8, netloc) cell exercises the
+    K-dependent budget math on the finer-grained politeness key."""
+    eng, rows_table = _run_crawl(spark, quota, politeness_key=key)
+    _, rows_full = _run_crawl(
+        spark, quota, politeness_key=key, full_scan_source=True
+    )
+    assert rows_table == rows_full
+    scans = [r.sched_scan for r in eng.stats.rounds]
+    assert scans and all(s["mode"] == "table" for s in scans), scans
+    assert all(s["base_rows_scanned"] <= s["base_rows_total"] for s in scans)
+    assert any(
+        s["base_rows_scanned"] < s["base_rows_total"] for s in scans
+    ), scans
 
 
 @pytest.mark.parametrize(
