@@ -622,23 +622,25 @@ def q_dedup_keep_best(spark, sf_dir):
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """Near-dup pairs at Hamming <= 8 over the 60-bit expression simhash.
+    """Near-dup pairs at Hamming <= 8 over the 60-bit simhash.
 
-    Candidates via multi-index Hamming (Norouzi et al., "Fast Search in
-    Hamming Space with Multi-Index Hashing"): split the 60-bit key into
-    3 chunks of 20 bits — a pair differing in <= 8 bits has SOME chunk
-    differing in <= floor(8/3) = 2 bits (pigeonhole-EXACT recall, the
-    verified output equals the cross join the DuckDB oracle computes).
-    One side carries every radius-<=2 variant of each chunk (1+20+190 =
-    211 keys/chunk), the other side its 3 exact chunk keys; the exact
-    side (3N rows) BROADCASTS, so the candidate probe is one map-side
-    hash-join pass with zero Exchange before the final tiny distinct.
+    Candidates via the multi-index Hamming join
+    (functions/simhash.hamming_pairs): 3 chunks of 20 bits — a pair
+    differing in <= 8 bits has SOME chunk differing in <= floor(8/3) = 2
+    bits (pigeonhole-EXACT recall, the verified output equals the cross
+    join the DuckDB oracle computes), so the probe side carries 211
+    keys/chunk. The exact side (3N rows) broadcasts while it fits
+    ``BROADCAST_ROWS`` — one map-side hash-join pass with no Exchange
+    before the final tiny distinct; past it both sides shuffle.
 
     vs the former 10x6-bit banding (measured, sf1.0 / 50k docs): the
     6-bit band space put 2.645e9 candidate rows through a shuffled
     self-join; the 20-bit chunk space passes 2.57e8 through a broadcast
     probe — 10.3x fewer candidates and no shuffle of the exploded side
     (guide §2.3/§2.4/§3.1)."""
+    from crawlspark import config as C
+    from crawlspark.functions.simhash import hamming_pairs
+
     docs = _t(spark, sf_dir, "documents")
     # spread (small parquet arrives as ONE partition — the Arrow UDF would
     # run serially) and persist: the fingerprint frame feeds BOTH sides of
@@ -646,62 +648,26 @@ def q_simhash_pairs(spark, sf_dir):
     # Registered in dedup's cache registry → released on the next dedup
     # entry-point invocation (ADVICE r2 unpersist contract).
     DD.release_caches()
-    W = 20  # chunk width; 3 chunks cover the 60-bit fingerprint
-    MASK = (1 << W) - 1
     fp = DD._persist(
-        DD._spread(docs.select("doc_id", "text"))
-        .select("doc_id", DD.simhash60_udf(F.col("text")).alias("fp"))
-        .select(
-            "doc_id",
-            "fp",
-            F.array(
-                *[
-                    F.shiftright(F.col("fp"), c * W).bitwiseAND(F.lit(MASK))
-                    for c in range(3)
-                ]
-            ).alias("chunks"),
+        DD._spread(docs.select("doc_id", "text")).select(
+            "doc_id", DD.simhash60_udf(F.col("text")).alias("fp")
         )
     )
-    # all XOR masks within Hamming radius 2 of a 20-bit chunk value
-    flips = [0] + [1 << i for i in range(W)] + [
-        (1 << i) | (1 << j) for i in range(W) for j in range(i + 1, W)
-    ]
-    flip_df = spark.createDataFrame(
-        [(c, f) for c in range(3) for f in flips], "chunk int, flip long"
-    )
-    # variant side: 633 probe keys per doc (3 chunks x 211 masks), built by
-    # a broadcast fan-out over the cached fingerprints — rows stream
-    # straight into the broadcast hash probe below, nothing shuffles
-    probes = fp.crossJoin(F.broadcast(flip_df)).select(
-        F.col("doc_id").alias("id_a"),
-        F.col("fp").alias("fa"),
-        (
-            F.col("chunk").cast("long") * (MASK + 1)
-            + F.element_at("chunks", F.col("chunk") + 1).bitwiseXOR(F.col("flip"))
-        ).alias("key"),
-    )
-    exact = fp.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("fp").alias("fb"),
-        F.explode(
-            F.array(
-                *[
-                    (
-                        F.lit(c).cast("long") * (MASK + 1)
-                        + F.element_at("chunks", c + 1)
-                    )
-                    for c in range(3)
-                ]
-            )
-        ).alias("key"),
-    )
     return (
-        probes.join(F.broadcast(exact), "key")
+        hamming_pairs(
+            fp.select(F.col("doc_id").alias("id_a"), "fp", F.col("fp").alias("fa")),
+            fp.select(F.col("doc_id").alias("id_b"), "fp", F.col("fp").alias("fb")),
+            8,
+            bits=60,
+            chunks=3,
+            broadcast_exact=3 * fp.count() <= C.BROADCAST_ROWS,
+        )
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("long"))
-        .filter(F.col("hamming") <= 8)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("fa").bitwiseXOR(F.col("fb"))).cast("long").alias("hamming"),
+        )
         .orderBy("id_a", "id_b")
     )
 
@@ -915,11 +881,11 @@ def _synth_pages_with_dups(spark, sf_dir, n=200, w=16, h=16):
 
 def q_phash_neardup(spark, sf_dir):
     """Image near-duplicate pairs by perceptual hash: decode → 64-bit
-    average-hash (Arrow pass, operators/payload.compute_phash) → banded
-    Hamming LSH self-join (functions/simhash.lsh_similar_pairs — one
-    shuffle on (band_id, band_val), recall pigeonhole-EXACT for
-    Hamming ≤ 3). The input corpus has planted perceptual near-dups
-    under distinct image_ids. Rows-only (pixel decode has no SQL twin);
+    average-hash (Arrow pass, operators/payload.compute_phash) → the
+    multi-index Hamming self-join (functions/simhash.lsh_similar_pairs —
+    4 chunk keys per side, one shuffle on the key, recall
+    pigeonhole-EXACT for any Hamming radius). The input corpus has
+    planted perceptual near-dups under distinct image_ids. Rows-only (pixel decode has no SQL twin);
     pinned by a brute-force-equivalence pytest gate."""
     from crawlspark.functions.simhash import lsh_similar_pairs
     from crawlspark.operators import payload as P
@@ -2065,11 +2031,11 @@ def q_xmodal_neardup(spark, sf_dir):
     """CROSS-MODAL near-dup pairs over the image+caption corpus: a pair
     survives only when BOTH modalities agree — phash Hamming ≤ 3 AND
     caption token-set Jaccard ≥ 0.4 (operators/payload.
-    image_caption_neardup: banded phash LSH candidates, caption Jaccard
+    image_caption_neardup: multi-index phash candidates, caption Jaccard
     verified on candidates only, never all-pairs text). Full value-hash
     twin: the DuckDB oracle brute-forces every pair with bit_count(xor)
-    while Spark runs the LSH plan — equal output because band recall is
-    pigeonhole-exact for Hamming ≤ N_BANDS-1."""
+    while Spark runs the chunk-key join — equal output because its
+    recall is pigeonhole-exact (functions/simhash.hamming_pairs)."""
     from crawlspark.operators.payload import image_caption_neardup
 
     return image_caption_neardup(_xmodal_corpus(spark, sf_dir)).orderBy(
@@ -2210,7 +2176,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # --------------------------------------------------------------------------
 
 def _simhash60_sql() -> str:
-    """Generated 60-term simhash60 twin (see operators/dedup.py)."""
+    """Generated 60-term twin of ``DD.simhash60_udf`` (operators/dedup.py)."""
     pairs = (
         "list_transform(list_distinct(toks), t -> "
         "{'h': ('0x'||substr(md5(t),1,15))::BIGINT, "

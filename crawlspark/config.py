@@ -26,6 +26,10 @@ BLOCKED_EXT_REGEX = (
     r"|rm|smil|wmv|swf|wma|zip|rar|gz|pdf)$"
 )
 
+# forced-broadcast budget in rows: a join side past it shuffles instead
+# (scheduled batch, bad-URL memory, simhash_pairs exact keys)
+BROADCAST_ROWS = 500_000
+
 
 @dataclass(frozen=True)
 class CrawlConfig:

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawlspark.config import CrawlConfig
+from crawlspark.config import BROADCAST_ROWS, CrawlConfig
 from crawlspark.functions import traps
 from crawlspark.functions import urls as U
 from crawlspark.icelite import IceliteCatalog
@@ -86,8 +86,6 @@ STATUS_VALUES = (
 )
 # driver-side known-domain cache budget (see CrawlEngine._known_doms)
 KNOWN_DOMAINS_CACHE_LIMIT = 1_000_000
-# bad-URL memory rows past which the similarity join shuffles
-BROADCAST_BAD_LIMIT = 500_000
 # tombstone parts that trigger a pending compaction between snapshots
 PENDING_COMPACT_PARTS = 64
 # HEADS table budget in rounds: B = quota × HEADS_REFRESH_ROUNDS rows per key
@@ -220,11 +218,10 @@ class CrawlEngine:
         # similarity joins degrade to shuffled hash joins (scale guard)
         self._n_bad_total = 0
         # forced-broadcast budget for the per-round scheduled batch (fetch
-        # join + near-dup probe): O(#ready-keys) rows at K=1 — multi-GB at
-        # 10^8+ domains, so past the budget those joins shuffle instead
-        self._batch_broadcast_limit = int(
-            config.extra.get("batch_broadcast_limit", 500_000)
-        )
+        # join + near-dup probe) and the bad-URL memory: the batch is
+        # O(#ready-keys) rows at K=1 — multi-GB at 10^8+ domains, so past
+        # the budget those joins shuffle instead
+        self._broadcast_rows = BROADCAST_ROWS
         # driver-side known-domain cache: lets admission answer "any new
         # domains in this batch?" with zero Spark jobs in steady state;
         # disabled (None) past the budget — the relational anti-join path
@@ -1139,7 +1136,7 @@ class CrawlEngine:
             hits = (
                 BAD.similarity_hits(
                     rest, self.bad, cfg.jaccard_threshold, cfg.jaccard_similar_count,
-                    broadcast_bad=self._n_bad_total <= BROADCAST_BAD_LIMIT,
+                    broadcast_bad=self._n_bad_total <= self._broadcast_rows,
                 )
                 .groupBy("url")
                 .agg(
@@ -1159,7 +1156,7 @@ class CrawlEngine:
         # sim_tokens and the other frontier columns would triple the
         # broadcast payload
         fetch_in = fetchable.select("url_hash", "url", "depth", "discovery_seq")
-        bb = n_sched <= self._batch_broadcast_limit
+        bb = n_sched <= self._broadcast_rows
         if cfg.extra.get("fetch_mode") == "http":
             from crawlspark.operators import httpfetch as HF
 
@@ -1219,7 +1216,7 @@ class CrawlEngine:
                     routed._crawlspark_path, routed_miss._crawlspark_path
                 )
         # near-dup probe vs round-start fingerprint state — LAZY: its only
-        # consumer is the statused write job below; the banded broadcast
+        # consumer is the statused write job below; the chunk-key broadcast
         # join over the materialized routed parquet evaluates exactly once
         nd = FE.neardup_hits(
             routed.filter(parse_cond).select("url_hash", "simhash"),

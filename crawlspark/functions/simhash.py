@@ -1,4 +1,4 @@
-"""SimHash fingerprinting + LSH-banded near-duplicate joins.
+"""SimHash fingerprinting + the Hamming-candidate join.
 
 Reference: /root/reference/crawler/simhash.py (64-bit simhash over a word
 Counter; similarity = fraction of equal bits, threshold 0.95 at
@@ -10,25 +10,23 @@ builtin ``hash()`` (simhash.py:21) which is salted per process
 md5(token) as a big-endian uint64: deterministic across processes, engines
 and runs.
 
-Fingerprint computation is an Arrow pandas UDF (numpy bit matrix per
-batch); candidate search is an LSH band join in pure DataFrame ops:
-4 bands × 16 bits, explode band keys, equi-join on (band, value), verify
-``bit_count(a ^ b) <= 3``. A pair within Hamming 3 differs in at most 3
-bands, so at least one of 4 bands matches exactly → recall = 1.0.
+Candidate search is one multi-index join (Norouzi et al., "Fast Search in
+Hamming Space with Multi-Index Hashing"), ``hamming_pairs``: split the
+fingerprint into ``chunks`` chunks; a pair within Hamming ``h`` differs
+in at most ``h // chunks`` bits in SOME chunk (pigeonhole), so probing
+every chunk value within that radius of each chunk finds every pair —
+recall is exact for any ``h``. The crawl's near-dup probe, the phash and
+cross-modal self-joins and the 60-bit ``simhash_pairs`` query all run it.
 """
 
 from __future__ import annotations
 
 from hashlib import md5
+from itertools import combinations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
-
-N_BANDS = 4
-BAND_BITS = 16
 
 
 def token_hash64(token: str) -> int:
@@ -53,53 +51,64 @@ def simhash_counter(counts: dict[str, int]) -> int:
     return int(fp.astype(np.int64))
 
 
-@F.pandas_udf(LongType())
-def simhash_text(texts: pd.Series) -> pd.Series:
-    """Arrow-vectorized simhash over raw text: tokenize (lowercase alnum
-    runs), count, weighted-bit fingerprint. One numpy pass per row's unique
-    tokens; Arrow batch transfer only."""
-    import re
-
-    splitter = re.compile(r"[^a-z0-9]+")
-    out = np.zeros(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts):
-        if not t:
-            continue
-        toks = [x for x in splitter.split(t.lower()) if x]
-        if not toks:
-            continue
-        counts: dict[str, int] = {}
-        for x in toks:
-            counts[x] = counts.get(x, 0) + 1
-        out[i] = simhash_counter(counts)
-    return pd.Series(out)
-
-
 def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def is_similar(a: Column, b: Column, max_hamming: int = 3) -> Column:
-    """ref crawler/simhash.py:35-48 + worker.py:36: ≥0.95·64 equal bits."""
-    return hamming64(a, b) <= max_hamming
+def _radius_masks(width: int, radius: int) -> list[int]:
+    """Every ``width``-bit XOR mask with at most ``radius`` bits set."""
+    return [
+        sum(1 << b for b in bits)
+        for r in range(radius + 1)
+        for bits in combinations(range(width), r)
+    ]
 
 
-def band_key(sim: Column, band: int) -> Column:
-    """16-bit band ``band`` (0..3) of the fingerprint, as a small long."""
-    return F.shiftright(sim, band * BAND_BITS).bitwiseAND(F.lit((1 << BAND_BITS) - 1))
+def hamming_pairs(
+    probe: DataFrame,
+    exact: DataFrame,
+    max_hamming: int,
+    bits: int = 64,
+    chunks: int = 4,
+    broadcast_exact: bool = False,
+) -> DataFrame:
+    """Distinct (probe payload, exact payload) rows whose ``fp`` columns
+    are within Hamming ``max_hamming``. Both frames carry a ``bits``-wide
+    fingerprint (higher bits zero) as ``fp``; the other columns are
+    payload (names must not collide).
 
-
-def with_bands(df: DataFrame, sim_col: str = "simhash") -> DataFrame:
-    """Explode each row into its N_BANDS (band_id, band_val) keys."""
-    bands = F.array(
+    Chunk ``c`` of width ``W = ceil(bits / chunks)`` is keyed
+    ``c·2^W + chunk_c``: the exact side explodes its ``chunks`` keys, the
+    probe side every key within radius ``max_hamming // chunks`` of its
+    own (``[0]`` masks at radius 0). ``broadcast_exact`` forces the exact
+    side into a broadcast hash join (the caller size-gates it); otherwise
+    both sides shuffle on the key."""
+    width = -(-bits // chunks)
+    masks = F.array(
+        *[F.lit(m) for m in _radius_masks(width, max_hamming // chunks)]
+    ).cast("array<bigint>")
+    keys = F.array(
         *[
-            F.struct(F.lit(b).alias("band_id"), band_key(F.col(sim_col), b).alias("band_val"))
-            for b in range(N_BANDS)
+            F.lit(c << width)
+            + F.shiftrightunsigned(F.col("fp"), c * width).bitwiseAND(
+                F.lit((1 << width) - 1)
+            )
+            for c in range(chunks)
         ]
     )
-    return df.withColumn("band", F.explode(bands)).select(
-        "*", F.col("band.band_id").alias("band_id"), F.col("band.band_val").alias("band_val")
-    ).drop("band")
+    variants = F.flatten(
+        F.transform(keys, lambda k: F.transform(masks, lambda m: k.bitwiseXOR(m)))
+    )
+    payload = [c for c in probe.columns + exact.columns if c != "fp"]
+    a = probe.select("*", F.explode(variants).alias("_key"))
+    b = exact.select("*", F.explode(keys).alias("_key"))
+    return (
+        a.withColumnRenamed("fp", "_fa")
+        .join(F.broadcast(b) if broadcast_exact else b, "_key")
+        .filter(hamming64(F.col("_fa"), F.col("fp")) <= max_hamming)
+        .select(*payload)
+        .distinct()
+    )
 
 
 def lsh_similar_pairs(
@@ -108,20 +117,11 @@ def lsh_similar_pairs(
     sim_col: str = "simhash",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """All (id_a < id_b) pairs with Hamming(simhash) ≤ max_hamming.
-
-    Plan: band-explode → shuffle once on (band_id, band_val) → equi-join
-    within buckets → exact bit_count verify → distinct. Recall is exact for
-    max_hamming ≤ N_BANDS-1 (pigeonhole). At 10^10 scale the band join is
-    the only shuffle and is skew-safe under AQE (band values are ~uniform).
-    """
-    a = with_bands(df.select(F.col(id_col).alias("id_a"), F.col(sim_col).alias("sim_a")), "sim_a")
-    b = with_bands(df.select(F.col(id_col).alias("id_b"), F.col(sim_col).alias("sim_b")), "sim_b")
-    pairs = (
-        a.join(b, ["band_id", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(is_similar(F.col("sim_a"), F.col("sim_b"), max_hamming))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    return pairs
+    """All (id_a < id_b) pairs with Hamming(``sim_col``) ≤ max_hamming:
+    the 64-bit ``hamming_pairs`` self-join, both sides shuffled on the
+    chunk key (recall exact for any ``max_hamming``)."""
+    return hamming_pairs(
+        df.select(F.col(id_col).alias("id_a"), F.col(sim_col).alias("fp")),
+        df.select(F.col(id_col).alias("id_b"), F.col(sim_col).alias("fp")),
+        max_hamming,
+    ).filter(F.col("id_a") < F.col("id_b"))

@@ -450,7 +450,7 @@ def minhash_lsh_pairs(
                             for r in range(rows)
                         ],
                     )
-                ).alias("band_key"),
+                ).alias("band_hash"),
             )
             for b in range(bands)
         ]
@@ -461,12 +461,12 @@ def minhash_lsh_pairs(
         base.filter(F.col("sig").isNotNull())
         .select("doc", F.explode(band_structs).alias("bk"))
         .select(
-            "doc", F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key")
+            "doc", F.col("bk.band_id").alias("band_id"), F.col("bk.band_hash").alias("band_hash")
         )
     )
     cand = (
         banded.alias("x")
-        .join(banded.alias("y"), ["band_id", "band_key"])
+        .join(banded.alias("y"), ["band_id", "band_hash"])
         .filter(F.col("x.doc") < F.col("y.doc"))
         .select(F.col("x.doc").alias("id_a"), F.col("y.doc").alias("id_b"))
         .distinct()
@@ -486,35 +486,6 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-
-
-def simhash60(text: Column) -> Column:
-    """60-bit expression-only simhash over token counts (md5_int60 token
-    hash; bit i set iff Σ ±count > 0). Pure column ops → has an exact SQL
-    twin; the crawl engine's 64-bit pandas-UDF simhash lives in
-    functions/simhash.py — this is the relational variant for dedup."""
-    toks = tokens(text)
-    uniq = F.array_distinct(toks)
-    # per unique token: (hash, count)
-    pairs = F.transform(
-        uniq,
-        lambda t: F.struct(
-            md5_int60(t).alias("h"),
-            F.size(F.filter(toks, lambda x: x == t)).alias("c"),
-        ),
-    )
-    fp = F.lit(0).cast("long")
-    for i in range(60):
-        bit_sum = F.aggregate(
-            pairs,
-            F.lit(0).cast("long"),
-            lambda acc, p: acc
-            + F.when(
-                F.shiftright(p["h"], i).bitwiseAND(F.lit(1)) == 1, p["c"]
-            ).otherwise(-p["c"]),
-        )
-        fp = fp + F.when(bit_sum > 0, F.lit(2**i).cast("long")).otherwise(F.lit(0))
-    return fp
 
 
 def embedding_neardup_pairs(
@@ -846,10 +817,10 @@ def _cosine_pudf(va: _pd.Series, vb: _pd.Series) -> _pd.Series:
 
 @_pandas_udf(_LongType())
 def simhash60_udf(texts: _pd.Series) -> _pd.Series:
-    """Arrow pandas-UDF twin of ``simhash60`` — identical output (md5
-    60-bit token hashes, weighted-bit sign), far faster than the 60-term
-    expression tree for wide corpora. The DuckDB oracle stays the
-    expression formula; both produce the same value."""
+    """60-bit simhash over token counts, as an Arrow pandas UDF: md5
+    60-bit token hashes (the ``md5_int60`` formula), bit i set iff
+    Σ ±count > 0. Its SQL twin is the DuckDB oracle's 60-term formula
+    (``_simhash60_sql`` in __spark_entry__.py)."""
     out = _np.zeros(len(texts), dtype=_np.int64)
     for i, t in enumerate(texts):
         counts: dict[str, int] = {}

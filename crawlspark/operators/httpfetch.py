@@ -113,10 +113,12 @@ def live_fetch_and_route(
     config: CrawlConfig,
     transport: Transport | None = None,
 ) -> DataFrame:
-    """Drop-in replacement for ``fetch.fetch_and_route`` backed by live
-    HTTP: fetch → parse HTML (links + visible text) → the shared routing
-    verdict. Output columns match the corpus path (caption = extracted
-    text, out_links = absolutized hrefs)."""
+    """The live-HTTP counterpart of the corpus fetch join
+    (``fetch.fetch_hits_and_route``): fetch → parse HTML (links + visible
+    text) → the shared routing verdict. Every scheduled row comes back,
+    a failed download as ``fetch_error``, so the engine runs no miss
+    recovery on this path. Output columns match the corpus path
+    (caption = extracted text, out_links = absolutized hrefs)."""
     from crawlspark.operators.fetch import route_verdict
     from crawlspark.operators.parse import extract_links_and_text
 

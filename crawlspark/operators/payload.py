@@ -116,11 +116,12 @@ def image_caption_neardup(
     near-dup only when BOTH modalities agree — perceptual-hash Hamming
     ≤ ``max_hamming`` AND caption token-set Jaccard ≥ ``min_jaccard``.
 
-    Plan (the 10^10-row shape): candidates come from the banded Hamming
-    LSH self-join on the phash column (functions/simhash.lsh_similar_pairs
-    — ONE shuffle on (band_id, band_val), recall pigeonhole-exact for
-    max_hamming ≤ N_BANDS-1); the caption Jaccard is then verified on the
-    CANDIDATES ONLY via two joins back to the tokenized caption column.
+    Plan (the 10^10-row shape): candidates come from the multi-index
+    Hamming self-join on the phash column (functions/simhash.
+    lsh_similar_pairs — ONE shuffle on the chunk key, recall
+    pigeonhole-exact for any max_hamming); the caption Jaccard is then
+    verified on the CANDIDATES ONLY via two joins back to the tokenized
+    caption column.
     Text similarity is never computed all-pairs — the image modality
     bounds the candidate set, so caption verification is O(candidates),
     the cross-modal analogue of LSH-then-verify.

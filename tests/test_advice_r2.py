@@ -89,6 +89,8 @@ def test_embedding_neardup_string_ids_and_zero_norm(spark):
 
 
 def test_dedup_caches_released_between_invocations(spark):
+    # start from an empty cache: crawl tests leave engine frames persisted
+    spark.catalog.clearCache()
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     DD.minhash_lsh_pairs(docs, "doc_id", "text").count()
     DD.ngram_jaccard_pairs(docs, "doc_id", "text").count()

@@ -1,7 +1,7 @@
-"""Scheduled-batch broadcast guard (VERDICT r2 #2): below the engine's
-row budget the fetch join / near-dup probe force-broadcast the batch;
-past it no forced BroadcastExchange of the batch may appear — the joins
-degrade to shuffled hash joins."""
+"""Broadcast guards (VERDICT r2 #2): below ``BROADCAST_ROWS`` the fetch
+join / near-dup probe force-broadcast the scheduled batch and
+simhash_pairs its exact chunk keys; past it no forced BroadcastExchange
+may appear — the joins degrade to shuffled hash joins."""
 
 from __future__ import annotations
 
@@ -53,23 +53,9 @@ def _fixtures(spark):
     return pages, sched
 
 
-def test_fetch_join_broadcast_guard_plans(spark):
-    pages, sched = _fixtures(spark)
-    cfg = CrawlConfig()
-
-    def plans():
-        forced = _plan(FE.fetch_and_route(sched, pages, cfg, broadcast_batch=True))
-        guarded = _plan(FE.fetch_and_route(sched, pages, cfg, broadcast_batch=False))
-        return forced, guarded
-
-    forced, guarded = _with_conf(spark, _no_auto_broadcast(spark), plans)
-    assert "BroadcastExchange" in forced
-    assert "BroadcastExchange" not in guarded  # past the budget: no forced bc
-
-
 def test_fetch_hits_join_broadcast_guard_plans(spark):
     """The engine's hits-only fetch join (ONE pages scan) carries the
-    same scale guard as the full miss-recovering variant."""
+    scale guard."""
     pages, sched = _fixtures(spark)
     cfg = CrawlConfig()
 
@@ -120,13 +106,13 @@ def test_crawl_identical_past_broadcast_budget(spark):
     cfg = CrawlConfig(
         allowed_url_patterns=(r"https?://[a-z0-9.-]*\.example(/|$)",),
         per_domain_quota=1,
-        extra={"batch_broadcast_limit": 0},  # force the shuffled-join path
     )
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="bcguard_"),
         checkpoint_interval=3, pages=pages, robots_bodies=robots,
         sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
     )
+    eng._broadcast_rows = 0  # force the shuffled-join path
     eng.start_from_frontier(frontier, parse_robots(robots), next_seq=n_pages)
     for _ in range(4):
         if not eng.run_round():
@@ -138,3 +124,25 @@ def test_crawl_identical_past_broadcast_budget(spark):
         ).collect()
     }
     assert rows_shuffled == rows_bc
+
+
+def test_simhash_pairs_broadcast_gate(spark, monkeypatch):
+    """Past ``BROADCAST_ROWS`` the simhash_pairs exact side is not
+    force-broadcast (the candidate join shuffles on the chunk key) and the
+    pairs are the same as on the broadcast path."""
+    import __spark_entry__ as E
+
+    from crawlspark import config as C
+
+    sf = "/root/testdata/sf0.001"
+
+    def run():
+        df = E.q_simhash_pairs(spark, sf)
+        return _plan(df), df.collect()
+
+    bc_plan, bc_rows = _with_conf(spark, _no_auto_broadcast(spark), run)
+    monkeypatch.setattr(C, "BROADCAST_ROWS", 0)
+    sh_plan, sh_rows = _with_conf(spark, _no_auto_broadcast(spark), run)
+    assert "BroadcastExchange" in bc_plan
+    assert "BroadcastExchange" not in sh_plan
+    assert bc_rows and sh_rows == bc_rows

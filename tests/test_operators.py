@@ -3,6 +3,7 @@ twins, dedup operators (SURVEY.md §5.1)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawlspark.functions import simhash as SH
@@ -84,13 +85,20 @@ def test_sim_tokens_twin(spark):
 
 
 def test_simhash_spark_matches_python_twin(spark):
+    """route_verdict's fused parse-stats UDF (the crawl's fingerprint
+    kernel) equals simhash_counter over the stopword-filtered counter."""
+    from crawlspark.operators.fetch import parse_stats_udf
+
     texts = ["the quick brown fox jumps", "", "a a a b b c", "x " * 200]
     df = spark.createDataFrame([(t,) for t in texts], ["caption"]).withColumn(
         "url_hash", F.xxhash64("caption")
     )
-    from crawlspark.operators.fetch import batch_simhash
-
-    got = {r["url_hash"]: r["simhash"] for r in batch_simhash(df).collect()}
+    got = {
+        r["url_hash"]: r["simhash"]
+        for r in df.select(
+            "url_hash", parse_stats_udf(F.col("caption"))["simhash"].alias("simhash")
+        ).collect()
+    }
     import re
 
     from crawlspark.functions.text import STOPWORDS, TOKEN_SPLIT_REGEX
@@ -105,26 +113,73 @@ def test_simhash_spark_matches_python_twin(spark):
         assert got[row["url_hash"]] == SH.simhash_counter(counts)
 
 
-def test_lsh_similar_pairs_exact_recall(spark):
+def _flip_spread(v: int, n: int, bits: int, chunks: int, rng) -> int:
+    """``v`` with ``n`` bits flipped, dealt round-robin over the chunks."""
+    width = -(-bits // chunks)
+    spans = [
+        list(range(c * width, min((c + 1) * width, bits))) for c in range(chunks)
+    ]
+    for s in spans:
+        rng.shuffle(s)
+    for i in range(n):
+        v ^= 1 << spans[i % chunks][i // chunks]
+    return v
+
+
+@pytest.mark.parametrize("max_hamming", [0, 3, 6, 8])
+@pytest.mark.parametrize("bits,chunks", [(64, 4), (60, 3)])
+def test_hamming_pairs_exact_recall(spark, bits, chunks, max_hamming):
+    """Pigeonhole-exact recall for any radius: neighbours planted at every
+    distance 0..h+2 (flips spread over all chunks, the worst case for a
+    per-chunk probe) pair exactly as the brute-force bit_count join."""
     import random
 
-    rng = random.Random(7)
-    base = rng.getrandbits(63)
-    rows = [(0, base)]
-    # neighbors at hamming 1..5
-    for i in range(1, 6):
-        v = base
-        for b in rng.sample(range(60), i):
-            v ^= 1 << b
-        rows.append((i, v))
-    df = spark.createDataFrame(rows, ["id", "simhash"])
-    pairs = {
+    rng = random.Random(bits * 100 + max_hamming)
+    rows = []
+    for base_i in range(3):
+        base = rng.getrandbits(bits)
+        rows.append((base_i * 100, base))
+        for d in range(max_hamming + 3):
+            rows.append((base_i * 100 + d + 1, _flip_spread(base, d, bits, chunks, rng)))
+    # as signed int64, the way Spark stores a 64-bit fingerprint
+    rows = [(i, v - (1 << 64) if v >> 63 else v) for i, v in rows]
+    df = spark.createDataFrame(rows, "id long, fp long")
+    a = df.select(F.col("id").alias("id_a"), "fp")
+    b = df.select(F.col("id").alias("id_b"), "fp")
+    got = {
         (r["id_a"], r["id_b"])
-        for r in SH.lsh_similar_pairs(df, "id", max_hamming=3).collect()
+        for r in SH.hamming_pairs(a, b, max_hamming, bits, chunks).collect()
     }
-    # 0-1, 0-2, 0-3 must be found (hamming <= 3); 0-4, 0-5 must not pair with 0
-    assert {(0, 1), (0, 2), (0, 3)} <= pairs
-    assert (0, 4) not in pairs and (0, 5) not in pairs
+    brute = {
+        (r["id_a"], r["id_b"])
+        for r in a.withColumnRenamed("fp", "fa")
+        .crossJoin(b)
+        .filter(F.bit_count(F.col("fa").bitwiseXOR(F.col("fp"))) <= max_hamming)
+        .collect()
+    }
+    assert got == brute
+    assert {(0, d + 1) for d in range(max_hamming + 1)} <= got
+
+
+def test_neardup_hits_at_hamming_6(spark):
+    """simhash_threshold=0.90 ⇒ Hamming 6: a pair 6 bits apart with flips
+    in all four 16-bit chunks is still a near-dup hit."""
+    from crawlspark.config import CrawlConfig
+    from crawlspark.operators.fetch import neardup_hits
+
+    h = CrawlConfig(simhash_threshold=0.90).simhash_max_hamming
+    assert h == 6
+    base = 0x0123456789ABCDEF
+    near = base
+    for b in (1, 17, 33, 49, 50, 2):  # chunks 0,1,2,3,3,0
+        near ^= 1 << b
+    far = base ^ 0x7F  # 7 bits apart
+    state = spark.createDataFrame([(1, base)], "url_hash long, simhash long")
+    batch = spark.createDataFrame(
+        [(10, near), (11, far)], "url_hash long, simhash long"
+    )
+    got = {r["url_hash"] for r in neardup_hits(batch, state, h).collect()}
+    assert got == {10}
 
 
 def test_minhash_equals_exact_jaccard(spark):
