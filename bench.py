@@ -103,7 +103,7 @@ def run_crawl_bench(spark, n_pages: int, n_domains: int, rounds: int) -> dict:
         pages=pages,
         robots_bodies=robots,
         sitemap_xml=spark.createDataFrame(
-            [], "registered_domain string, xml string"
+            [], "registered_domain string, url string, xml string"
         ),
     )
     eng.start_from_frontier(frontier, rules, next_seq=n_pages)

@@ -86,6 +86,9 @@ STATUS_VALUES = (
 )
 # driver-side known-domain cache budget (see CrawlEngine._known_doms)
 KNOWN_DOMAINS_CACHE_LIMIT = 1_000_000
+# crawl-delay rules kept in the driver dict (see CrawlEngine._delay_map);
+# past it the engine uses the distributed crawl-delay state table
+DELAY_KEYS_BUDGET = 2_000_000
 # tombstone parts that trigger a pending compaction between snapshots
 PENDING_COMPACT_PARTS = 64
 # HEADS table budget in rounds: B = quota × HEADS_REFRESH_ROUNDS rows per key
@@ -249,11 +252,11 @@ class CrawlEngine:
         # are a dict fed from the materialized sched batch's LOCAL column
         # read — zero per-round Spark jobs where the distributed path
         # cost a state rewrite + a blocked-keys join per round. Budgeted
-        # like _known_doms: past delay_keys_budget crawl-delay rules the
+        # like _known_doms: past DELAY_KEYS_BUDGET crawl-delay rules the
         # engine falls back to the distributed state table.
         self._delay_last: dict[str, tuple[str, int]] = {}  # dkey -> (dom, last_round)
         self._delay_rounds_cache: tuple[dict | None] | None = None
-        self._delay_keys_budget = int(config.extra.get("delay_keys_budget", 2_000_000))
+        self._delay_keys_budget = DELAY_KEYS_BUDGET
         # opt-in per-key error circuit breaker (default OFF — same
         # conformance reasoning as Crawl-delay): extra["error_backoff"]
         # = {"threshold": E, "rounds": B} benches a politeness key for B
@@ -304,7 +307,7 @@ class CrawlEngine:
                 [], "registered_domain string, body string"
             )
             self.sitemap_xml = self._sitemaps_df if self._sitemaps_df is not None else s.createDataFrame(
-                [], "registered_domain string, xml string"
+                [], "registered_domain string, url string, xml string"
             )
             return
         else:
@@ -345,12 +348,9 @@ class CrawlEngine:
         if self._sitemaps_df is not None:
             self.sitemap_xml = self._sitemaps_df
         else:
-            sm = s.read.parquet(f"{self.corpus_dir}/sitemaps.parquet")
-            cols = [F.col("domain").alias("registered_domain")]
-            if "url" in sm.columns:
-                # by-URL addressing enables sitemapindex recursion (S7)
-                cols.append(F.col("url"))
-            self.sitemap_xml = sm.select(*cols, "xml").persist()
+            self.sitemap_xml = s.read.parquet(f"{self.corpus_dir}/sitemaps.parquet").select(
+                F.col("domain").alias("registered_domain"), "url", "xml"
+            ).persist()
 
     def _empty(self, schema: T.StructType) -> DataFrame:
         return self.spark.createDataFrame([], schema)
@@ -416,16 +416,6 @@ class CrawlEngine:
         out = self.spark.read.parquet(path)
         out._crawlspark_path = path
         return out
-
-    def _append_state_deltas(self, items: list[tuple[DataFrame, str, bool]]) -> None:
-        """Write several INDEPENDENT state deltas concurrently — each is
-        one small Spark job whose cost is mostly fixed driver/scheduler
-        latency, so overlapping them turns a sum of round-trips into a
-        max. Spark job submission is thread-safe; paths/versions are
-        allocated serially first, and parts are registered only after
-        every write succeeds (same write-then-register semantics as the
-        sequential helper)."""
-        self._append_state_deltas_async(items)()
 
     def _append_state_deltas_async(self, items: list[tuple[DataFrame, str, bool]]):
         """Kick the delta writes off in background threads and return a
@@ -621,7 +611,7 @@ class CrawlEngine:
         lazily after any rules change (one tiny collect of the delayed
         domains — O(#crawl_delay rules), the same budget class as the
         known-domains cache). None when the rule count exceeds
-        ``delay_keys_budget`` → callers use the distributed state path."""
+        ``_delay_keys_budget`` → callers use the distributed state path."""
         if self._delay_rounds_cache is None:
             if self._delay_rules_count() > self._delay_keys_budget:
                 self._delay_rounds_cache = (None,)
@@ -1068,17 +1058,6 @@ class CrawlEngine:
     # ------------------------------------------------------------------
     def run_round(self) -> bool:
         t0 = time.monotonic()
-        import os as _os
-
-        _dbg = _os.environ.get("CRAWLSPARK_DEBUG_TIMING")
-        _last = [t0]
-
-        def _mark(label: str) -> None:
-            if _dbg:
-                now = time.monotonic()
-                print(f"    [{self.round_no}] {label}: {now - _last[0]:.1f}s", flush=True)
-                _last[0] = now
-
         cfg = self.config
         self.round_no += 1
 
@@ -1094,7 +1073,6 @@ class CrawlEngine:
             "sched",
         )
         n_sched = fast_count(sched)
-        _mark("schedule")
         if n_sched == 0:
             if blocked is not None and (
                 self.pending.join(blocked, self._key_col, "left_semi")
@@ -1222,7 +1200,6 @@ class CrawlEngine:
             routed.filter(parse_cond).select("url_hash", "simhash"),
             self.fingerprints, cfg.simhash_max_hamming, broadcast_batch=bb,
         )
-        _mark("routed")
 
         # terminal statuses for every scheduled row (the reference marks
         # every popped URL complete)
@@ -1330,7 +1307,6 @@ class CrawlEngine:
             )
             round_deltas.append((new_bad, "bad", True))
         join_deltas = self._append_state_deltas_async(round_deltas)
-        _mark("pending_update")
 
         if self._backoff is not None:
             self._update_backoff_state(s, routed)
@@ -1381,7 +1357,6 @@ class CrawlEngine:
             routes is None or n_parse_routed > 0 or "redirect" in routes
         )
         n_new = self._admit(candidates) if admit_gate else 0
-        _mark("admit")
         join_deltas()
         m = obs.get
         by_status = {sv: int(m[sv]) for sv in STATUS_VALUES if m[sv]}
@@ -1396,9 +1371,7 @@ class CrawlEngine:
             if k in ("lowdata_similar_skip", "error_similar_skip", "low_data")
         ) + by_status.get("error", 0)
         self._n_bad_total += n_bad
-        _mark("deltas_join")
         self._checkpoint_state()
-        _mark("ckpt_state")
 
         dt = time.monotonic() - t0
         self.stats.rounds.append(

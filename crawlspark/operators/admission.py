@@ -23,7 +23,7 @@ and the seen anti-join stays one table.
 
 Candidate input schema:
   raw_url, depth, src('seed'|'link'|'redirect'|'sitemap'),
-  parent_seq (long), link_pos (int), sub_pos (int)
+  parent_seq (long), link_pos (int), sub_pos (int or long)
 Ordering within a batch (the FIFO enqueue order the reference would have
 produced): (parent_seq, link_pos, sub_pos) — all data-derived, stable
 across parallelism levels (SURVEY.md §4.3.4).
@@ -76,18 +76,31 @@ def validate(cands: DataFrame, config: CrawlConfig) -> DataFrame:
 
 
 
-def assign_seq(df: DataFrame, order_cols: list[str], start: int, materialize=None) -> "DataFrame":
-    """Scalable deterministic sequence assignment: global ``row_number``
-    over a total data-derived order WITHOUT a single-partition window.
+# rows above which assign_seq ranks in two phases instead of one global
+# (single-partition) row_number window
+TWO_PHASE_ROWS = 200_000
 
-    Two phases (the classic parallel zipWithIndex, but order-by-key so the
-    result is independent of physical partitioning): range-repartition on
-    the order key, rank within each partition, then add per-partition
-    offsets (one tiny collect). The order key must be unique — here
-    (parent_seq, link_pos, sub_pos) is unique by construction."""
-    from pyspark.sql import Window
 
+def assign_seq(
+    df: DataFrame, order_cols: list[str], start: int, materialize=None,
+    n_rows: int | None = None, out_col: str = "discovery_seq",
+) -> DataFrame:
+    """Deterministic sequence ``start, start+1, ...`` in ``out_col`` over
+    a total data-derived order (the order key must be unique — e.g.
+    (parent_seq, link_pos, sub_pos, raw_url)).
+
+    Up to TWO_PHASE_ROWS rows (``n_rows``, the caller's count) one global
+    ``row_number`` window is fastest. Above that, or when the count is
+    unknown (``n_rows=None``), the single-partition sort would funnel, so
+    the rank runs in two phases (the classic parallel zipWithIndex, but
+    order-by-key so the result is independent of physical partitioning):
+    range-repartition on the order key, rank within each partition, then
+    add per-partition offsets (one tiny collect). Both paths produce the
+    identical sequence."""
     cols = [F.col(c) for c in order_cols]
+    if n_rows is not None and n_rows <= TWO_PHASE_ROWS:
+        rn = F.row_number().over(Window.orderBy(*cols))
+        return df.withColumn(out_col, (F.lit(start) + rn - 1).cast("long"))
     d = df.repartitionByRange(*cols).withColumn("_pid", F.spark_partition_id())
     local = F.row_number().over(
         Window.partitionBy("_pid").orderBy(*cols)
@@ -111,45 +124,8 @@ def assign_seq(df: DataFrame, order_cols: list[str], start: int, materialize=Non
     else:
         off = F.lit(0)
     return d.withColumn(
-        "discovery_seq", (F.lit(start) + off + F.col("_rn") - 1).cast("long")
+        out_col, (F.lit(start) + off + F.col("_rn") - 1).cast("long")
     ).drop("_pid", "_rn")
-
-
-def assign_dense_rank(
-    df: DataFrame, key_col: str, out_col: str, materialize=None
-) -> DataFrame:
-    """Scalable global ``dense_rank`` over ``key_col`` WITHOUT a
-    single-partition window (assign_seq's sibling for ranks): range-
-    repartition on the key (equal keys co-locate), dense_rank within each
-    partition, then add per-partition distinct-key offsets (one tiny
-    collect). Result depends only on key values — identical at any
-    parallelism level."""
-    d = df.repartitionByRange(F.col(key_col)).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    d = d.withColumn(
-        "_dr", F.dense_rank().over(Window.partitionBy("_pid").orderBy(key_col))
-    )
-    if materialize is not None:
-        # pin (_pid, _dr) before the counts collect — repartitionByRange
-        # re-samples boundaries per evaluation (same caveat as assign_seq)
-        d = materialize(d, "dom_ranked")
-    counts = {
-        r["_pid"]: r["nd"]
-        for r in d.groupBy("_pid").agg(
-            F.countDistinct(key_col).alias("nd")
-        ).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    if offsets:
-        mapping = F.create_map(*[F.lit(x) for kv in offsets.items() for x in kv])
-        off = F.element_at(mapping, F.col("_pid"))
-    else:
-        off = F.lit(0)
-    return d.withColumn(out_col, (off + F.col("_dr")).cast("int")).drop("_pid", "_dr")
 
 
 @dataclass
@@ -203,10 +179,8 @@ def admit(
             break
         keyed = with_url_keys(validate(batch, config))
         # batch-dedup: first occurrence (reference admission order) wins
-        # raw_url tie-break: (parent_seq, link_pos, sub_pos) is unique for
-        # link/redirect/seed candidates but legacy multi-doc sitemap
-        # fixtures can collide — the oracle's sort breaks ties on the raw
-        # URL, so the windows must too
+        # raw_url tie-break: the oracle's sort breaks ties on the raw URL,
+        # so the windows must too
         w = Window.partitionBy("url_hash").orderBy(
             "parent_seq", "link_pos", "sub_pos", "raw_url"
         )
@@ -299,24 +273,11 @@ def admit(
         eff_rules = rules.union(all_new_rules) if all_new_rules is not None else rules
         gated = R.robots_gate(fresh, eff_rules, "path", broadcast_rules=broadcast_rules)
 
-        # assign discovery_seq in admission order. Batch-size switch: a
-        # global row_number (single-partition sort) is fastest below
-        # ~200k candidates/round; above that, assign_seq's two-phase
-        # range-rank keeps the sort parallel (both produce the identical
-        # sequence — the order key is data-derived and unique, so the
-        # result is independent of partitioning; the parallelism-
-        # invariance test runs with the two-phase path forced on).
-        seq_threshold = int(config.extra.get("seq_two_phase_threshold", 200_000))
-        if n_fresh > seq_threshold:
-            rows = assign_seq(
-                gated, ["parent_seq", "link_pos", "sub_pos", "raw_url"], seq, materialize
-            )
-        else:
-            w_seq = Window.orderBy("parent_seq", "link_pos", "sub_pos", "raw_url")
-            rows = gated.withColumn(
-                "discovery_seq",
-                (F.lit(seq) + F.row_number().over(w_seq) - 1).cast("long"),
-            )
+        # discovery_seq in admission order
+        rows = assign_seq(
+            gated, ["parent_seq", "link_pos", "sub_pos", "raw_url"], seq,
+            materialize, n_rows=n_fresh,
+        )
         rows = rows.withColumn(
             "status",
             F.when(F.col("robots_allowed"), F.lit("pending")).otherwise(
@@ -341,8 +302,7 @@ def admit(
         if no_new_rules:
             break
         batch = expand_sitemaps(
-            new_rules, sitemap_xml, materialize, seq,
-            config=config, row_counter=row_counter,
+            new_rules, sitemap_xml, materialize, seq, row_counter=row_counter
         )
 
     return AdmissionResult(new_rows=all_new_rows, new_rules=all_new_rules)
@@ -356,99 +316,66 @@ SITEMAP_MAX_LEVELS = 3
 
 
 def expand_sitemaps(new_rules: DataFrame, sitemap_xml: DataFrame,
-                    materialize, seq: int, config: CrawlConfig | None = None,
-                    row_counter=None) -> DataFrame:
+                    materialize, seq: int, row_counter=None) -> DataFrame:
     """Candidate batch from the new domains' sitemaps.
 
-    By-URL mode (sitemap_xml carries a ``url`` column — the corpus "web"
-    serves sitemap documents addressable by URL): start from the robots
-    ``Sitemap:`` lines (rule rows, in body order), fetch each document,
-    and recurse into sitemapindex entries — any <loc> matching
-    SITEMAP_LOC_REGEX is fetched and re-parsed as a sitemap (depth-
-    bounded DFS), everything else is a page candidate. Ordering is the
-    DFS path key (root rule_pos, then loc positions, fixed-width), fully
-    data-derived → stable at any parallelism.
-
-    Legacy mode (no ``url`` column): every stored XML for a new domain is
-    parsed flat — the pre-index behavior, kept for by-domain fixtures.
+    ``sitemap_xml`` (registered_domain, url, xml) serves sitemap documents
+    addressable by URL: start from the robots ``Sitemap:`` lines (rule
+    rows, in body order), fetch each document, and recurse into
+    sitemapindex entries — any <loc> matching SITEMAP_LOC_REGEX is fetched
+    and re-parsed as a sitemap (depth-bounded DFS), everything else is a
+    page candidate. Ordering is (domain, DFS path key (root rule_pos,
+    then loc positions, fixed-width), loc), fully data-derived → stable
+    at any parallelism. Every page gets ``parent_seq = seq + 1`` and its
+    global rank in that order as ``sub_pos``.
 
     The conformance oracle (crawlspark.oracle._sitemap_page_locs)
     re-implements the identical traversal."""
-    if "url" in sitemap_xml.columns:
-        requests = new_rules.filter(F.col("rule_type") == "sitemap").select(
-            "registered_domain",
-            F.col("value").alias("url"),
-            F.lpad(F.col("rule_pos").cast("string"), 4, "0").alias("path"),
-        )
-        page_parts: list[DataFrame] = []
-        for level in range(SITEMAP_MAX_LEVELS):
-            if requests.isEmpty():
-                break
-            docs = requests.join(sitemap_xml, ["registered_domain", "url"])
-            locs = materialize(
-                R.parse_sitemaps(docs, extra_cols=("path",)), f"sm_locs_{level}"
-            )
-            child = F.concat(
-                F.col("path"), F.lit("."),
-                F.lpad(F.col("loc_pos").cast("string"), 4, "0"),
-            )
-            is_sm = F.col("loc").rlike(SITEMAP_LOC_REGEX)
-            requests = locs.filter(is_sm).select(
-                "registered_domain", F.col("loc").alias("url"), child.alias("path")
-            )
-            page_parts.append(
-                locs.filter(~is_sm).select(
-                    "registered_domain", child.alias("path"), "loc"
-                )
-            )
-        if not page_parts:
-            return new_rules.sparkSession.createDataFrame([], _CAND_SCHEMA)
-        pages = reduce(DataFrame.unionByName, page_parts)
-    else:
-        new_doms = (
-            new_rules.filter(F.col("rule_type") == "probed")
-            .select("registered_domain").distinct()
-        )
-        locs = R.parse_sitemaps(new_doms.join(sitemap_xml, "registered_domain"))
-        pages = locs.select(
-            "registered_domain",
-            F.lpad(F.col("loc_pos").cast("string"), 8, "0").alias("path"),
-            "loc",
-        )
-    # domain rank: a global dense_rank is a single-partition sort — fine
-    # for the steady-state trickle of new domains, a cold-start funnel
-    # over millions of them (VERDICT r2 #3). Above the threshold switch to
-    # the two-phase range-rank (identical values — the rank depends only
-    # on the data-derived key). The per-domain sub_pos window is bounded
-    # by one domain's sitemap size and stays as-is.
-    threshold = int(
-        (config.extra.get("sitemap_two_phase_threshold", 200_000))
-        if config is not None else 200_000
+    requests = new_rules.filter(F.col("rule_type") == "sitemap").select(
+        "registered_domain",
+        F.col("value").alias("url"),
+        F.lpad(F.col("rule_pos").cast("string"), 4, "0").alias("path"),
     )
-    pages = materialize(pages, "sm_pages")
+    page_parts: list[DataFrame] = []
+    for level in range(SITEMAP_MAX_LEVELS):
+        if requests.isEmpty():
+            break
+        docs = requests.join(sitemap_xml, ["registered_domain", "url"])
+        locs = materialize(
+            R.parse_sitemaps(docs, extra_cols=("path",)), f"sm_locs_{level}"
+        )
+        child = F.concat(
+            F.col("path"), F.lit("."),
+            F.lpad(F.col("loc_pos").cast("string"), 4, "0"),
+        )
+        is_sm = F.col("loc").rlike(SITEMAP_LOC_REGEX)
+        requests = locs.filter(is_sm).select(
+            "registered_domain", F.col("loc").alias("url"), child.alias("path")
+        )
+        page_parts.append(
+            locs.filter(~is_sm).select(
+                "registered_domain", child.alias("path"), "loc"
+            )
+        )
+    if not page_parts:
+        return new_rules.sparkSession.createDataFrame([], _CAND_SCHEMA)
+    pages = materialize(reduce(DataFrame.unionByName, page_parts), "sm_pages")
     n_pages = row_counter(pages) if row_counter is not None else pages.count()
-    if n_pages > threshold:
-        ranked = assign_dense_rank(pages, "registered_domain", "dom_rank", materialize)
-    else:
-        ranked = pages.withColumn(
-            "dom_rank", F.dense_rank().over(Window.orderBy("registered_domain"))
-        )
-    w_sub = Window.partitionBy("registered_domain").orderBy("path", "loc")
-    return (
-        ranked
-        .withColumn("sub_pos", F.row_number().over(w_sub))
-        .select(
-            F.col("loc").alias("raw_url"),
-            F.lit(0).alias("depth"),
-            F.lit("sitemap").alias("src"),
-            (F.lit(seq) + F.col("dom_rank")).cast("long").alias("parent_seq"),
-            F.lit(0).alias("link_pos"),
-            F.col("sub_pos"),
-        )
+    ranked = assign_seq(
+        pages, ["registered_domain", "path", "loc"], 1, materialize,
+        n_rows=n_pages, out_col="sub_pos",
+    )
+    return ranked.select(
+        F.col("loc").alias("raw_url"),
+        F.lit(0).alias("depth"),
+        F.lit("sitemap").alias("src"),
+        F.lit(seq + 1).cast("long").alias("parent_seq"),
+        F.lit(0).alias("link_pos"),
+        F.col("sub_pos"),
     )
 
 
 _CAND_SCHEMA = (
     "raw_url string, depth int, src string, "
-    "parent_seq long, link_pos int, sub_pos int"
+    "parent_seq long, link_pos int, sub_pos long"
 )

@@ -42,33 +42,12 @@ def schedule_round(
     tie-break are unchanged. Default (None) preserves the reference's
     FIFO ordering exactly.
 
-    Two-phase top-K: (1) map-side partial — per shuffle partition keep at
-    most K rows per domain via a partition-local window after a
-    repartition-free aggregation pushdown; Catalyst already does partial
-    aggregation for min(), so we implement phase 1 as a min-seq semi-filter
-    when K == 1 (the common case), falling back to one exact window.
+    K == 1 FIFO (the common case): per-key min(discovery_seq) is a hash
+    aggregate (map-side partial → tiny shuffle), then a semi-join back —
+    no full-frontier window. Every other case (K > 1, or an
+    ``order_col``) is one salted two-phase top-K window.
     """
-    if order_col is not None:
-        # priority scheduling: salted two-phase exact top-K under the
-        # composite order (same skew math as the K>1 FIFO path — phase 1
-        # can never drop a row that is in its domain's true top-K)
-        order = [F.col(order_col).asc(), F.col("discovery_seq").asc()]
-        salt = F.pmod(F.col("url_hash"), F.lit(SALT_BUCKETS))
-        w1 = Window.partitionBy(key_col, salt).orderBy(*order)
-        survivors = (
-            pending.withColumn("_rn1", F.row_number().over(w1))
-            .filter(F.col("_rn1") <= quota_per_domain)
-            .drop("_rn1")
-        )
-        w2 = Window.partitionBy(key_col).orderBy(*order)
-        return (
-            survivors.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= quota_per_domain)
-            .drop("_rn")
-        )
-    if quota_per_domain == 1:
-        # K=1: per-domain min(seq) is a hash aggregate (map-side partial →
-        # tiny shuffle), then a semi-join back — no full-frontier window.
+    if quota_per_domain == 1 and order_col is None:
         # NO forced broadcast: `heads` is one row per domain, which at the
         # north_rule's 10^8+ domains is a multi-GB build side. AQE picks
         # broadcast when heads is actually small and a shuffled hash join
@@ -77,22 +56,24 @@ def schedule_round(
             F.min("discovery_seq").alias("discovery_seq")
         )
         return pending.join(heads, [key_col, "discovery_seq"], "left_semi")
-    # K>1: salted two-phase top-K (north_rule hot-domain skew handling).
-    # Phase 1 ranks within (domain, salt) — the hot domain's pending rows
-    # split across SALT_BUCKETS partitions instead of one — keeping at
-    # most K per salt; phase 2 takes the exact top-K over the <= K·S
-    # survivors per domain. Salt is data-derived (url_hash), so the result
-    # is identical at any parallelism level, and equals the unsalted
-    # window by construction (phase 1 never drops a global top-K row:
-    # a row in the domain top-K is in its salt's top-K).
+    # salted two-phase top-K (north_rule hot-domain skew handling).
+    # Phase 1 ranks within (key, salt) — the hot key's pending rows split
+    # across SALT_BUCKETS partitions instead of one — keeping at most K
+    # per salt; phase 2 takes the exact top-K over the <= K·S survivors
+    # per key. Salt is data-derived (url_hash), so the result is
+    # identical at any parallelism level, and equals the unsalted window
+    # by construction (phase 1 never drops a global top-K row: a row in
+    # the key's top-K is in its salt's top-K).
+    order = [F.col(order_col).asc()] if order_col is not None else []
+    order.append(F.col("discovery_seq").asc())
     salt = F.pmod(F.col("url_hash"), F.lit(SALT_BUCKETS))
-    w1 = Window.partitionBy(key_col, salt).orderBy(F.col("discovery_seq").asc())
+    w1 = Window.partitionBy(key_col, salt).orderBy(*order)
     survivors = (
         pending.withColumn("_rn1", F.row_number().over(w1))
         .filter(F.col("_rn1") <= quota_per_domain)
         .drop("_rn1")
     )
-    w2 = Window.partitionBy(key_col).orderBy(F.col("discovery_seq").asc())
+    w2 = Window.partitionBy(key_col).orderBy(*order)
     return (
         survivors.withColumn("_rn", F.row_number().over(w2))
         .filter(F.col("_rn") <= quota_per_domain)

@@ -104,14 +104,11 @@ class OracleCrawl:
             r["domain"]: r["body"]
             for r in pq.read_table(f"{self.corpus_dir}/robots.parquet").to_pylist()
         }
-        self.sitemaps = {}
-        self.sitemaps_by_url: dict[tuple[str, str], str] | None = None
         self.sitemap_roots: dict[str, list[tuple[int, str]]] = {}
-        sm_rows = pq.read_table(f"{self.corpus_dir}/sitemaps.parquet").to_pylist()
-        for r in sm_rows:
-            self.sitemaps.setdefault(r["domain"], []).append(r["xml"])
-        if sm_rows and "url" in sm_rows[0]:
-            self.sitemaps_by_url = {(r["domain"], r["url"]): r["xml"] for r in sm_rows}
+        self.sitemaps_by_url: dict[tuple[str, str], str] = {
+            (r["domain"], r["url"]): r["xml"]
+            for r in pq.read_table(f"{self.corpus_dir}/sitemaps.parquet").to_pylist()
+        }
         self.seeds = [
             r["url"] for r in pq.read_table(f"{self.corpus_dir}/seeds.parquet").to_pylist()
         ]
@@ -184,10 +181,7 @@ class OracleCrawl:
                     self.sitemap_roots[rdom] = [
                         (p, v) for _, t, v, p in rows_r if t == "sitemap"
                     ]
-                    if self.sitemaps_by_url is not None:
-                        if self.sitemap_roots[rdom]:
-                            new_doms.append(rdom)
-                    elif rdom in self.sitemaps:
+                    if self.sitemap_roots[rdom]:
                         new_doms.append(rdom)
                 path = urlparse(url).path
                 allowed = can_fetch_py(self.rules[rdom], path)
@@ -211,14 +205,6 @@ class OracleCrawl:
     # re-parsed to SITEMAP_MAX_LEVELS doc levels; pages ordered by the
     # fixed-width DFS path key)
     def _sitemap_page_locs(self, dom: str) -> list[str]:
-        if self.sitemaps_by_url is None:
-            out = [
-                (f"{pos:08d}", loc)
-                for xml in self.sitemaps.get(dom, [])
-                for pos, loc in enumerate(parse_sitemap_py(xml))
-            ]
-            out.sort()
-            return [loc for _, loc in out]
         sm_loc = re.compile(r"\.xml($|\?)", re.I)
         out = []
 

@@ -54,7 +54,7 @@ def run(spark, n_pages: int, bucketed: bool) -> dict:
     eng = CrawlEngine(
         spark, cfg, None, state, checkpoint_interval=10**9,
         pages=pages, robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
+        sitemap_xml=spark.createDataFrame([], "registered_domain string, url string, xml string"),
     )
     eng.start_from_frontier(frontier, rules, next_seq=n_pages)
     eng.pages.count()  # materialize the cache outside the timing (both modes)

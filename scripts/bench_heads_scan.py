@@ -45,7 +45,7 @@ def run(spark, n_pages: int, n_domains: int, rounds: int,
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="headsbench_"),
         checkpoint_interval=10**9, pages=pages, robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
+        sitemap_xml=spark.createDataFrame([], "registered_domain string, url string, xml string"),
     )
     eng.start_from_frontier(frontier, parse_robots(robots), next_seq=n_pages)
     # the schedule step isn't separable from the round DAG, so time it

@@ -44,7 +44,7 @@ def run_at(cores: int, n_pages: int, n_domains: int, rounds: int, quota: int = 1
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix=f"scale{cores}_"),
         checkpoint_interval=10**9, pages=pages, robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
+        sitemap_xml=spark.createDataFrame([], "registered_domain string, url string, xml string"),
     )
     eng.start_from_frontier(frontier, rules, next_seq=n_pages)
     # warmup round (JIT, python workers) excluded from the timed window

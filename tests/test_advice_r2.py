@@ -27,7 +27,11 @@ def test_admission_cache_coherent_across_branches(spark):
         [], "registered_domain string, rule_type string, value string, rule_pos int"
     )
     robots = spark.createDataFrame(
-        [("d.example", "User-agent: *\nDisallow: /private/\n")],
+        [(
+            "d.example",
+            "User-agent: *\nDisallow: /private/\n"
+            "Sitemap: https://d.example/sm.xml\n",
+        )],
         "registered_domain string, body string",
     )
     xml = (
@@ -35,7 +39,8 @@ def test_admission_cache_coherent_across_branches(spark):
         "https://d.example/wiki/page2</loc></url></urlset>"
     )
     sitemaps = spark.createDataFrame(
-        [("d.example", xml)], "registered_domain string, xml string"
+        [("d.example", "https://d.example/sm.xml", xml)],
+        "registered_domain string, url string, xml string",
     )
 
     calls = {"n": 0}

@@ -110,7 +110,7 @@ def test_crawl_identical_past_broadcast_budget(spark):
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="bcguard_"),
         checkpoint_interval=3, pages=pages, robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
+        sitemap_xml=spark.createDataFrame([], "registered_domain string, url string, xml string"),
     )
     eng._broadcast_rows = 0  # force the shuffled-join path
     eng.start_from_frontier(frontier, parse_robots(robots), next_seq=n_pages)

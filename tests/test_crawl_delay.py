@@ -36,18 +36,19 @@ def delay_corpus(tmp_path_factory):
     return str(d)
 
 
-def _cfg(respect: bool, budget: int | None = None) -> CrawlConfig:
+def _cfg(respect: bool) -> CrawlConfig:
     extra: dict = {"respect_crawl_delay": True} if respect else {}
-    if budget is not None:
-        extra["delay_keys_budget"] = budget
     return CrawlConfig(allowed_url_patterns=C.ALLOWED_PATTERNS, extra=extra)
 
 
-def _run_engine(spark, corpus, cfg, tmp_path_factory):
+def _run_engine(spark, corpus, cfg, tmp_path_factory, budget: int | None = None):
     eng = CrawlEngine(
         spark, cfg, corpus,
         str(tmp_path_factory.mktemp("cd_state")), checkpoint_interval=50,
     )
+    if budget is not None:
+        # read lazily in _delay_map, so setting it before start() applies
+        eng._delay_keys_budget = budget
     eng.start(resume=False)
     eng.run()
     return eng
@@ -92,11 +93,11 @@ def test_parse_crawl_delay_rows():
 def test_engine_matches_oracle_with_crawl_delay(
     spark, delay_corpus, tmp_path_factory, budget
 ):
-    """budget=None exercises the driver-dict fast path (zero per-round
-    delay jobs); budget=0 forces the distributed state-table fallback —
+    """budget=None (DELAY_KEYS_BUDGET) exercises the driver-dict fast path
+    (zero per-round delay jobs); budget=0 forces the distributed state-table fallback —
     both must match the oracle identically."""
-    cfg = _cfg(respect=True, budget=budget)
-    eng = _run_engine(spark, delay_corpus, cfg, tmp_path_factory)
+    cfg = _cfg(respect=True)
+    eng = _run_engine(spark, delay_corpus, cfg, tmp_path_factory, budget)
     ora = OracleCrawl(delay_corpus, cfg)
     ora.run()
     rows = _conformance(eng, ora)

@@ -60,7 +60,7 @@ def _run_crawl(spark, quota: int, rounds: int = 6,
     eng = CrawlEngine(
         spark, cfg, None, tempfile.mkdtemp(prefix="heads_"),
         checkpoint_interval=3, pages=pages, robots_bodies=robots,
-        sitemap_xml=spark.createDataFrame([], "registered_domain string, xml string"),
+        sitemap_xml=spark.createDataFrame([], "registered_domain string, url string, xml string"),
     )
     if refresh:
         eng._heads_refresh_rounds = refresh
@@ -163,7 +163,7 @@ def test_heads_table_survives_resume(spark):
             spark, cfg, None, state, checkpoint_interval=2, pages=pages,
             robots_bodies=robots,
             sitemap_xml=spark.createDataFrame(
-                [], "registered_domain string, xml string"
+                [], "registered_domain string, url string, xml string"
             ),
         )
         eng._heads_refresh_rounds = 3

@@ -5,7 +5,7 @@ an engine run in a SUBPROCESS at local[2] with different shuffle
 partitioning, both against the oracle-checked corpus.
 
 The subprocess engine additionally FORCES the two-phase assign_seq path
-(seq_two_phase_threshold=0) while the in-session engine uses the
+(admission.TWO_PHASE_ROWS = 0) while the in-session engine uses the
 single-window path — equality proves the two discovery_seq assignment
 strategies are interchangeable at any parallelism (VERDICT r1 #6)."""
 
@@ -27,13 +27,14 @@ sys.path.insert(0, "/root/repo")
 from crawlspark.config import CrawlConfig
 from crawlspark import corpus as C
 from crawlspark.engine import CrawlEngine
+from crawlspark.operators import admission
 from crawlspark.session import get_spark
 
+admission.TWO_PHASE_ROWS = 0
 corpus_dir, state_dir = sys.argv[1], sys.argv[2]
 spark = get_spark("inv2", master="local[2]", shuffle_partitions=7)
 cfg = CrawlConfig(
     allowed_url_patterns=C.ALLOWED_PATTERNS, per_domain_quota=2,
-    extra={"seq_two_phase_threshold": 0},
 )
 eng = CrawlEngine(spark, cfg, corpus_dir, state_dir, checkpoint_interval=1000)
 eng.start(resume=False)
