@@ -51,7 +51,6 @@ class CrawlConfig:
     user_agent: str = "crawlspark/0.1"
     # engine knobs (no reference analog — scale features)
     frontier_buckets: int = 32  # hash buckets for the frontier/seen tables
-    domain_salt_buckets: int = 8  # salt fan-out for hot registered domains
     bloom_bits_per_key: int = 12
     max_rounds: int | None = None
     extra: dict = field(default_factory=dict)

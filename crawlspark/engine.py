@@ -31,8 +31,6 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
-from functools import reduce
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -86,9 +84,6 @@ STATUS_VALUES = (
 )
 # driver-side known-domain cache budget (see CrawlEngine._known_doms)
 KNOWN_DOMAINS_CACHE_LIMIT = 1_000_000
-# crawl-delay rules kept in the driver dict (see CrawlEngine._delay_map);
-# past it the engine uses the distributed crawl-delay state table
-DELAY_KEYS_BUDGET = 2_000_000
 # tombstone parts that trigger a pending compaction between snapshots
 PENDING_COMPACT_PARTS = 64
 # HEADS table budget in rounds: B = quota × HEADS_REFRESH_ROUNDS rows per key
@@ -237,40 +232,30 @@ class CrawlEngine:
             "host" if config.extra.get("politeness_key") == "netloc"
             else "registered_domain"
         )
-        # opt-in robots Crawl-delay pacing (default OFF — the reference
-        # ignores the directive, and conformance schedules must stay
-        # byte-identical): per-domain delay in ROUNDS derived from the
-        # rules table (ceil(delay_s / politeness_delay_s)); state = one
-        # tiny (key, registered_domain, last_round) table of DELAYED keys
-        # only, rewritten per round via _mat_state and carried in
-        # snapshots. Scale: O(#domains-with-crawl-delay) rows, the
-        # blocked anti-join is AQE-guarded like the K=1 heads join.
+        # opt-in politeness holds (default OFF — the reference has
+        # neither, and conformance schedules must stay byte-identical).
+        # Both rules say "this key may not be scheduled until round X"
+        # and share one (bkey, until_round) blocked-keys table: a key is
+        # blocked in round r iff some row has until_round >= r. It is
+        # rewritten once per round (_update_blocked_state, O(#blocked
+        # keys), expired rows dropped) and rides snapshots as
+        # `blocked_state`. The pure-Python oracle mirrors both rules, so
+        # full fetch-order conformance holds with either flag on
+        # (tests/test_crawl_delay.py, tests/test_backoff.py).
+        # - robots Crawl-delay, extra["respect_crawl_delay"]: a key
+        #   scheduled in round r whose domain asks for delay_rounds =
+        #   ceil(Crawl-delay / politeness_delay_s) > 1 is held through
+        #   round r + delay_rounds - 1.
+        # - error circuit breaker, extra["error_backoff"] =
+        #   {"threshold": E, "rounds": B}: a key with >= E HTTP >= 500
+        #   results in round r (server distress — page-level 4xx never
+        #   trips it) is held through round r + B.
         self._respect_crawl_delay = bool(config.extra.get("respect_crawl_delay"))
-        self._delay_state: DataFrame | None = None
-        self._n_delay_rules: int | None = None  # None = recount from rules
-        # driver-side delay bookkeeping (VERDICT r4 #4): in-window keys
-        # are a dict fed from the materialized sched batch's LOCAL column
-        # read — zero per-round Spark jobs where the distributed path
-        # cost a state rewrite + a blocked-keys join per round. Budgeted
-        # like _known_doms: past DELAY_KEYS_BUDGET crawl-delay rules the
-        # engine falls back to the distributed state table.
-        self._delay_last: dict[str, tuple[str, int]] = {}  # dkey -> (dom, last_round)
-        self._delay_rounds_cache: tuple[dict | None] | None = None
-        self._delay_keys_budget = DELAY_KEYS_BUDGET
-        # opt-in per-key error circuit breaker (default OFF — same
-        # conformance reasoning as Crawl-delay): extra["error_backoff"]
-        # = {"threshold": E, "rounds": B} benches a politeness key for B
-        # rounds after a round in which >= E of its fetches returned
-        # HTTP >= 500 (server distress — page-level 4xx never trips it).
-        # State = one tiny (bkey, until_round) table of TRIPPED keys,
-        # rewritten per round and snapshot-carried; the pure-Python
-        # oracle mirrors the rule so full fetch-order conformance holds
-        # with the flag on (tests/test_backoff.py).
         eb = config.extra.get("error_backoff")
         self._backoff: tuple[int, int] | None = (
             (int(eb["threshold"]), int(eb["rounds"])) if eb else None
         )
-        self._backoff_state: DataFrame | None = None
+        self._blocked_state: DataFrame | None = None
         # opt-in priority scheduling (the north_star's "priority queue
         # realized as window-ranked micro-batches", end-to-end in the
         # engine): extra["priority_col"] names a pending column ranked
@@ -595,188 +580,70 @@ class CrawlEngine:
         }
         return frame, telemetry
 
-    # -- opt-in robots Crawl-delay pacing ------------------------------
-    def _delay_rules_count(self) -> int:
-        """#crawl_delay rows in the rules table, recounted lazily after
-        any rules change (one tiny job; only ever runs when the feature
-        flag is on)."""
-        if self._n_delay_rules is None:
-            self._n_delay_rules = self.rules.filter(
-                F.col("rule_type") == "crawl_delay"
-            ).count()
-        return self._n_delay_rules
-
-    def _delay_map(self) -> dict[str, int] | None:
-        """registered_domain → delay_rounds as a driver dict, recomputed
-        lazily after any rules change (one tiny collect of the delayed
-        domains — O(#crawl_delay rules), the same budget class as the
-        known-domains cache). None when the rule count exceeds
-        ``_delay_keys_budget`` → callers use the distributed state path."""
-        if self._delay_rounds_cache is None:
-            if self._delay_rules_count() > self._delay_keys_budget:
-                self._delay_rounds_cache = (None,)
-            else:
-                self._delay_rounds_cache = (
-                    {
-                        r["registered_domain"]: int(r["delay_rounds"])
-                        for r in self._delays_plan().collect()
-                    },
-                )
-        return self._delay_rounds_cache[0]
-
-    def _delays_plan(self) -> DataFrame:
-        """(registered_domain, delay_rounds) for domains whose robots ask
-        for MORE than one politeness tick between fetches:
-        delay_rounds = ceil(Crawl-delay / politeness_delay_s), max across
-        duplicate directives; non-numeric values are ignored. A lazy plan
-        over the materialized rules state — evaluated inside the consuming
-        join, never its own job."""
-        tick = float(self.config.politeness_delay_s)
-        return (
-            self.rules.filter(F.col("rule_type") == "crawl_delay")
-            .groupBy("registered_domain")
-            .agg(F.max(F.col("value").cast("double")).alias("_ds"))
-            .select(
-                "registered_domain",
-                F.greatest(F.lit(1), F.ceil(F.col("_ds") / F.lit(tick)))
-                .cast("int")
-                .alias("delay_rounds"),
-            )
-            .filter(F.col("delay_rounds") > 1)
-        )
-
+    # -- opt-in politeness holds (Crawl-delay, error breaker) ----------
     def _blocked_keys(self) -> DataFrame | None:
-        """Politeness keys excluded from this round's schedule: keys
-        still inside their Crawl-delay window, and keys benched by the
-        error circuit breaker (None when no feature contributes).
-        O(#delayed + #tripped) rows; AQE decides the join strategy
-        downstream (same guard philosophy as the K=1 heads)."""
-        parts: list[DataFrame] = []
-        if self._respect_crawl_delay and self._delay_rules_count() != 0:
-            dmap = self._delay_map()
-            if dmap is not None:
-                # driver dict: prune expired windows in place, the rest
-                # ARE the blocked keys — a tiny literal frame, no join
-                expired = [
-                    k
-                    for k, (d, lr) in self._delay_last.items()
-                    if self.round_no - lr >= dmap.get(d, 0)
-                ]
-                for k in expired:
-                    del self._delay_last[k]
-                if self._delay_last:
-                    parts.append(
-                        self.spark.createDataFrame(
-                            [(k,) for k in self._delay_last],
-                            f"{self._key_col} string",
-                        )
-                    )
-            elif self._delay_state is not None:
-                parts.append(
-                    self._delay_state.join(self._delays_plan(), "registered_domain")
-                    .filter(
-                        (F.lit(self.round_no) - F.col("last_round"))
-                        < F.col("delay_rounds")
-                    )
-                    .select(F.col("dkey").alias(self._key_col))
-                )
-        if self._backoff is not None and self._backoff_state is not None:
-            parts.append(
-                self._backoff_state.filter(
-                    F.col("until_round") >= F.lit(self.round_no)
-                ).select(F.col("bkey").alias(self._key_col))
-            )
-        if not parts:
+        """Politeness keys held out of this round's schedule by a
+        Crawl-delay window or an error-breaker bench (None until either
+        rule has written the table). O(#blocked) rows; AQE decides the
+        join strategy downstream (same guard philosophy as the K=1
+        heads)."""
+        if self._blocked_state is None:
             return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self._blocked_state.filter(
+            F.col("until_round") >= F.lit(self.round_no)
+        ).select(F.col("bkey").alias(self._key_col))
 
-    def _update_backoff_state(self, s: DataFrame, routed: DataFrame) -> None:
-        """Trip the breaker for keys whose round had >= threshold HTTP
-        >= 500 results (frozen spec; route == 'error' covers every
-        non-2xx/3xx terminal). One tiny full-rewrite job per round when
-        the feature is on — state is O(#tripped-keys), expired rows are
-        dropped on every rewrite."""
-        thresh, bench_rounds = self._backoff
-        err5 = routed.filter(
-            (F.col("route") == "error") & (F.col("http_status") >= 500)
-        ).select("url_hash")
-        newly = (
-            s.join(err5, "url_hash", "left_semi")
-            .groupBy(F.col(self._key_col).alias("bkey"))
-            .agg(F.count("*").alias("n_err"))
-            .filter(F.col("n_err") >= thresh)
-            .select(
-                "bkey",
-                F.lit(self.round_no + bench_rounds).alias("until_round"),
-            )
-        )
-        prev = (
-            None
-            if self._backoff_state is None
-            else self._backoff_state.filter(
-                F.col("until_round") >= F.lit(self.round_no)
-            )
-        )
-        merged = newly if prev is None else prev.unionByName(newly)
-        merged = merged.groupBy("bkey").agg(
-            F.max("until_round").alias("until_round")
-        )
-        self._backoff_state = self._mat_state(merged, "backoff", single=True)
-
-    def _update_delay_state(self, sched: DataFrame) -> None:
-        """Record last_round for the DELAYED keys scheduled this round
-        (keys without a crawl-delay never consult the state). Fast path
-        (delay rules within budget): a pure driver-dict update fed by a
-        LOCAL column read of the materialized sched parquet — ZERO Spark
-        jobs per round (VERDICT r4 #4; the old path rewrote a state
-        table every round). Over budget: the distributed rewrite."""
-        if not self._respect_crawl_delay or self._delay_rules_count() == 0:
-            return
-        dmap = self._delay_map()
-        if dmap is not None:
-            keys = self._local_values(sched, self._key_col)
-            doms = (
-                keys
-                if self._key_col == "registered_domain"
-                else self._local_values(sched, "registered_domain")
-            )
-            if keys is None or doms is None:
-                # batch too large / unreadable locally → one tiny collect
-                pairs = [
-                    (r[0], r[1])
-                    for r in sched.select(self._key_col, "registered_domain")
-                    .distinct().collect()
-                ]
-            else:
-                pairs = zip(keys, doms)
-            for k, d in pairs:
-                if d in dmap:
-                    self._delay_last[k] = (d, self.round_no)
-            return
-        newly = (
-            sched.select(
-                F.col(self._key_col).alias("dkey"), "registered_domain"
-            )
-            .distinct()
-            .join(self._delays_plan().select("registered_domain"), "registered_domain")
-            .select(
-                "dkey",
+    def _update_blocked_state(self, s: DataFrame, routed: DataFrame) -> None:
+        """One rewrite of the blocked-keys table per scheduled round: the
+        keys this round's Crawl-delay windows and breaker trips hold,
+        unioned with the previous rows that outlive this round, max
+        until_round per key."""
+        r = self.round_no
+        parts: list[DataFrame] = []
+        if self._respect_crawl_delay:
+            # delay_rounds = ceil(Crawl-delay / politeness_delay_s) per
+            # directive (the per-key max below keeps the largest; a
+            # non-numeric value is NULL and holds nothing). A domain's
+            # rules are fixed once it is probed, before any of its URLs
+            # is pending, so this equals the oracle's read-time test
+            # round_no - last_sched < delay_rounds.
+            tick = float(self.config.politeness_delay_s)
+            delays = self.rules.filter(F.col("rule_type") == "crawl_delay").select(
                 "registered_domain",
-                F.lit(self.round_no).alias("last_round"),
+                F.ceil(F.col("value").cast("double") / F.lit(tick)).alias("dr"),
             )
+            parts.append(
+                s.select(F.col(self._key_col).alias("bkey"), "registered_domain")
+                .join(delays.filter(F.col("dr") > 1), "registered_domain")
+                .select("bkey", (F.lit(r - 1) + F.col("dr")).cast("int").alias("until_round"))
+            )
+        if self._backoff is not None:
+            # route == 'error' covers every non-2xx/3xx terminal; only
+            # HTTP >= 500 counts toward the threshold (frozen spec)
+            thresh, bench_rounds = self._backoff
+            err5 = routed.filter(
+                (F.col("route") == "error") & (F.col("http_status") >= 500)
+            ).select("url_hash")
+            parts.append(
+                s.join(err5, "url_hash", "left_semi")
+                .groupBy(F.col(self._key_col).alias("bkey"))
+                .agg(F.count("*").alias("n_err"))
+                .filter(F.col("n_err") >= thresh)
+                .select("bkey", F.lit(r + bench_rounds).alias("until_round"))
+            )
+        if self._blocked_state is not None:
+            parts.append(self._blocked_state.filter(F.col("until_round") > F.lit(r)))
+        merged = parts[0]
+        for p in parts[1:]:
+            merged = merged.unionByName(p)
+        # repartition(1) first: the single partition already satisfies
+        # the per-key aggregate, so the one-file table costs one exchange
+        self._blocked_state = self._mat_state(
+            merged.repartition(1)
+            .groupBy("bkey")
+            .agg(F.max("until_round").alias("until_round")),
+            "blocked",
         )
-        merged = (
-            newly
-            if self._delay_state is None
-            else self._delay_state.unionByName(newly)
-        )
-        merged = merged.groupBy("dkey", "registered_domain").agg(
-            F.max("last_round").alias("last_round")
-        )
-        self._delay_state = self._mat_state(merged, "crawl_delay", single=True)
 
     def _gc_scratch(self) -> None:
         import shutil
@@ -793,27 +660,12 @@ class CrawlEngine:
             self.rules = (
                 self.catalog.load(self.spark, snap, "rules") or self._empty(RULES_SCHEMA)
             )
-            self._n_delay_rules = None
-            self._delay_rounds_cache = None
-            if self._respect_crawl_delay:
-                ds = self.catalog.load(self.spark, snap, "crawl_delay_state")
-                if ds is not None:
-                    if self._delay_map() is not None:
-                        # within budget: in-flight windows resume into the
-                        # driver dict (O(#delayed-keys) rows by contract)
-                        self._delay_last = {
-                            r["dkey"]: (r["registered_domain"], int(r["last_round"]))
-                            for r in ds.collect()
-                        }
-                    else:
-                        self._delay_state = self._mat_state(
-                            ds, "crawl_delay", single=True
-                        )
-            if self._backoff is not None:
-                bs = self.catalog.load(self.spark, snap, "backoff_state")
+            if self._respect_crawl_delay or self._backoff is not None:
+                # in-flight Crawl-delay windows and breaker benches
+                bs = self.catalog.load(self.spark, snap, "blocked_state")
                 if bs is not None:
-                    self._backoff_state = self._mat_state(
-                        bs, "backoff", single=True
+                    self._blocked_state = self._mat_state(
+                        bs, "blocked", single=True
                     )
             for name in ("completed", "bad", "fingerprints"):
                 self._state_parts[name] = self.catalog.paths(snap, name)
@@ -854,8 +706,6 @@ class CrawlEngine:
         self.round_no = 0
         self._append_state_delta(pending, "pending", single=False)
         self.rules = rules
-        self._n_delay_rules = None
-        self._delay_rounds_cache = None
         self.next_seq = next_seq
         self._init_known_doms()
         self._checkpoint_state()
@@ -969,18 +819,9 @@ class CrawlEngine:
         if res.new_rules is not None:
             self.rules = self.rules.unionByName(res.new_rules)
             self._rules_dirty = True
-            self._n_delay_rules = None
-            self._delay_rounds_cache = None
-            if self._known_doms is not None:
-                # keep the cache coherent when the relational path ran
-                # (huge batch); fast-path updates happened in-place
-                self._known_doms |= {
-                    r[0]
-                    for r in res.new_rules.select("registered_domain")
-                    .distinct().collect()
-                }
-                if len(self._known_doms) > KNOWN_DOMAINS_CACHE_LIMIT:
-                    self._known_doms = None
+            # admit() added every domain it probed to the cache in place
+            if self._known_doms is not None and len(self._known_doms) > KNOWN_DOMAINS_CACHE_LIMIT:
+                self._known_doms = None
         try:
             if self.bloom is not None:
                 delta_filter = self.bloom.build(rows.select("url_hash"))
@@ -1011,20 +852,10 @@ class CrawlEngine:
             "bad": list(self._state_parts.get("bad", [])),
             "fingerprints": list(self._state_parts.get("fingerprints", [])),
         }
-        if self._respect_crawl_delay and self._delay_last:
-            # Crawl-delay pacing state rides the snapshot so a resumed
-            # crawl keeps honoring in-flight delay windows (driver dict
-            # serialized to the same (dkey, registered_domain,
-            # last_round) schema the distributed path uses)
-            tables["crawl_delay_state"] = self.spark.createDataFrame(
-                [(k, d, lr) for k, (d, lr) in self._delay_last.items()],
-                "dkey string, registered_domain string, last_round int",
-            )
-        elif self._respect_crawl_delay and self._delay_state is not None:
-            tables["crawl_delay_state"] = self._delay_state
-        if self._backoff is not None and self._backoff_state is not None:
-            # circuit-breaker benches survive resume the same way
-            tables["backoff_state"] = self._backoff_state
+        if self._blocked_state is not None:
+            # in-flight Crawl-delay windows and breaker benches survive
+            # resume
+            tables["blocked_state"] = self._blocked_state
         snap = self.catalog.commit(
             tables,
             meta={
@@ -1080,8 +911,9 @@ class CrawlEngine:
                 .count()
                 > 0
             ):
-                # everything pending sits inside a Crawl-delay window —
-                # this round is an IDLE politeness tick, not termination
+                # everything pending sits inside a Crawl-delay window or
+                # a breaker bench — this round is an IDLE politeness
+                # tick, not termination
                 dt = time.monotonic() - t0
                 self.stats.rounds.append(
                     RoundStats(self.round_no, 0, 0, {}, dt, sched_scan)
@@ -1092,7 +924,6 @@ class CrawlEngine:
                 return True
             self.round_no -= 1
             return False
-        self._update_delay_state(sched)
 
         s = sched.withColumn("sim_tokens", BAD.sim_tokens(F.col("url")))
 
@@ -1308,8 +1139,8 @@ class CrawlEngine:
             round_deltas.append((new_bad, "bad", True))
         join_deltas = self._append_state_deltas_async(round_deltas)
 
-        if self._backoff is not None:
-            self._update_backoff_state(s, routed)
+        if self._respect_crawl_delay or self._backoff is not None:
+            self._update_blocked_state(s, routed)
 
         # discovery ----------------------------------------------------
         # the statused 'parsed' set, derived without the statused join

@@ -161,13 +161,10 @@ def admit(
     all_new_rules: DataFrame | None = None
     batch = candidates
     seq = next_seq
-    # cache-coherence guard (ADVICE r2): when a pass takes the relational
-    # branch, the domains it probes must reach known_domains before a LATER
-    # pass takes the fast path, or that pass re-probes them (duplicate rule
-    # rows in all_new_rules + the persisted table). We sync the cache from
-    # the materialized new_rules when it is cheaply readable; otherwise the
-    # fast path stays disabled for the remainder of THIS call.
-    fast_ok = True
+    # known_domains has one owner — this function: the fast path adds the
+    # domains it probes, the relational path adds new_rules' domains (a
+    # local read, else a collect) before a LATER pass may take the fast
+    # path, so no pass re-probes a domain (duplicate rule rows, ADVICE r2)
 
     for pass_no in range(3):
         # pass 0's batch comes from a round that parsed/redirected ≥ 1
@@ -220,7 +217,7 @@ def admit(
         new_doms = None
         batch_doms = (
             local_values(fresh, "registered_domain")
-            if (fast_ok and known_domains is not None and local_values is not None)
+            if (known_domains is not None and local_values is not None)
             else None
         )
         if batch_doms is not None:
@@ -258,16 +255,19 @@ def admit(
             all_new_rules = (
                 new_rules if all_new_rules is None else all_new_rules.union(new_rules)
             )
-            if known_domains is not None:
+            if known_domains is not None and batch_doms is None:
+                # relational path: the fast path already added its domains
                 doms = (
                     local_values(new_rules, "registered_domain")
                     if local_values is not None
                     else None
                 )
-                if doms is not None:
-                    known_domains.update(doms)
-                else:
-                    fast_ok = False
+                if doms is None:
+                    doms = [
+                        r[0] for r in
+                        new_rules.select("registered_domain").distinct().collect()
+                    ]
+                known_domains.update(doms)
 
         # robots gate against (existing ∪ new) rules
         eff_rules = rules.union(all_new_rules) if all_new_rules is not None else rules

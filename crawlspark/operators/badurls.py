@@ -147,30 +147,3 @@ def similarity_hits(
         .filter(F.col("count") >= count_threshold)
         .select(F.col("s_url").alias("url"), "kind")
     )
-
-
-def similar_to_bad(
-    scheduled: DataFrame,
-    bad: DataFrame,
-    threshold: float = JACCARD_THRESHOLD,
-    count_threshold: int = SIMILAR_COUNT,
-) -> DataFrame:
-    """URLs of ``scheduled`` that are Jaccard-similar to >= count_threshold
-    rows of ``bad``. Both inputs need (url, host, sim_tokens). The bad set
-    is small (skip memories) → broadcast; join key = host so cross-domain
-    pairs never materialize (ref returns 0 across netlocs)."""
-    s = scheduled.select(
-        F.col("url").alias("s_url"), "host", F.col("sim_tokens").alias("s_tok")
-    )
-    b = bad.select("host", F.col("sim_tokens").alias("b_tok"))
-    inter = F.size(F.array_intersect(F.col("s_tok"), F.col("b_tok")))
-    union = F.size(F.array_union(F.col("s_tok"), F.col("b_tok")))
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(0.0)
-    return (
-        s.join(F.broadcast(b), "host")
-        .filter(jac >= threshold)
-        .groupBy("s_url")
-        .count()
-        .filter(F.col("count") >= count_threshold)
-        .select(F.col("s_url").alias("url"))
-    )

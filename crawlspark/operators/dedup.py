@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from crawlspark.functions.text import md5_int60, tokens, word_ngrams
+from crawlspark.functions.text import tokens, word_ngrams
 
 MINHASH_K = 32
 MINHASH_BANDS = 16  # rows per band = 2
@@ -379,32 +379,6 @@ def _mh_constants(k: int = MINHASH_K) -> list[tuple[int, int]]:
 MINHASH_AB = _mh_constants()
 
 
-def minhash_signatures(base: DataFrame, id_col: str = "doc",
-                       shingle_col: str = "shs", k: int = MINHASH_K) -> DataFrame:
-    """(doc, h0..h{k-1}) minhash signature table via explode + one hash
-    aggregate. Deliberately NOT array higher-order functions: transform/
-    array_min lambdas are interpreted per element (no whole-stage
-    codegen) and measured ~100x slower than this shape — explode to one
-    row per (doc, shingle), k plain arithmetic projections (codegen'd),
-    map-side partial min, tiny shuffle keyed by doc."""
-    ex = base.select(
-        F.col(id_col).alias("doc"), F.explode(F.col(shingle_col)).alias("s")
-    ).select(
-        "doc", F.pmod(md5_int60(F.col("s")), F.lit(MINHASH_PRIME)).alias("b")
-    )
-    return ex.groupBy("doc").agg(
-        *[
-            F.min(
-                F.pmod(
-                    F.lit(MINHASH_AB[i][0]) * F.col("b") + F.lit(MINHASH_AB[i][1]),
-                    F.lit(MINHASH_PRIME),
-                )
-            ).alias(f"h{i}")
-            for i in range(k)
-        ]
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -739,23 +713,21 @@ def text_shingles_udf(n: int):
 
 
 def shingle_minhash_udf(n: int, k: int = MINHASH_K):
-    """Fused Arrow twin of ``text_shingles_udf`` + ``minhash_signatures``:
+    """Fused Arrow twin of ``text_shingles_udf`` + the MinHash signature:
     one pass over the text yields (shs, sig) — the distinct word-n-gram
     shingles as their 60-bit md5 hashes AND the k-wide minhash
     signature, with NO corpus-sized explode or extra shuffle between
-    them. Values are bit-identical to the relational pipeline: the base
-    hash is the shared 60-bit md5 (int(md5(s)[:15], 16), the exact
-    ``md5_int60`` formula) reduced mod the Mersenne prime for the
-    signatures, and the k permutations are the same frozen
+    them. The base hash is the shared 60-bit md5 (int(md5(s)[:15], 16),
+    the exact ``md5_int60`` formula) reduced mod the Mersenne prime for
+    the signatures, and the k permutations are the frozen
     ``MINHASH_AB`` affine family evaluated in int64 (products < 2^62 —
-    no overflow, same as the JVM path). The verify stage intersects the
+    no overflow). The verify stage intersects the
     60-bit hash arrays instead of shingle strings (guide §2.3 — 8-byte
     elements instead of ~25-char strings through the shuffle and the
     intersect); counts differ only if two distinct shingles of one
     document pair collide in 60 bits (~|shingles|²/2^61 — the same
     documented stance as ngram_jaccard_pairs' hashed inverted index).
-    Documents with no shingles get ``sig = NULL`` (they never entered
-    the signature aggregate before either)."""
+    Documents with no shingles get ``sig = NULL``."""
     A = _np.array([a for a, _ in MINHASH_AB[:k]], dtype=_np.int64)
     B = _np.array([b for _, b in MINHASH_AB[:k]], dtype=_np.int64)
     P = MINHASH_PRIME
@@ -798,21 +770,6 @@ def shingle_minhash_udf(n: int, k: int = MINHASH_K):
         )
 
     return f
-
-
-@_pandas_udf(T.DoubleType())
-def _cosine_pudf(va: _pd.Series, vb: _pd.Series) -> _pd.Series:
-    """Row-wise cosine of two array<double> columns, Arrow-batched numpy.
-    Zero-norm vectors yield cosine 0 (no-match), matching
-    embedding_neardup_pairs' convention."""
-    if len(va) == 0:
-        return _pd.Series([], dtype=float)
-    a = _np.stack(va.to_numpy()).astype(_np.float64)
-    b = _np.stack(vb.to_numpy()).astype(_np.float64)
-    dot = _np.einsum("ij,ij->i", a, b)
-    den = _np.linalg.norm(a, axis=1) * _np.linalg.norm(b, axis=1)
-    den[den == 0.0] = _np.inf
-    return _pd.Series(dot / den)
 
 
 @_pandas_udf(_LongType())

@@ -235,7 +235,7 @@ class OracleCrawl:
         # engine schedule_round(order_col=...); None = reference FIFO
         prio = cfg.extra.get("priority_col")
         # opt-in error circuit breaker — mirrors engine
-        # _update_backoff_state / _blocked_keys (frozen spec: >= E
+        # _update_blocked_state / _blocked_keys (frozen spec: >= E
         # HTTP >= 500 results for a key in one round bench it for B)
         eb = cfg.extra.get("error_backoff")
         scheduled: list[str] = []

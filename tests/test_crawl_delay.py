@@ -41,14 +41,11 @@ def _cfg(respect: bool) -> CrawlConfig:
     return CrawlConfig(allowed_url_patterns=C.ALLOWED_PATTERNS, extra=extra)
 
 
-def _run_engine(spark, corpus, cfg, tmp_path_factory, budget: int | None = None):
+def _run_engine(spark, corpus, cfg, tmp_path_factory):
     eng = CrawlEngine(
         spark, cfg, corpus,
         str(tmp_path_factory.mktemp("cd_state")), checkpoint_interval=50,
     )
-    if budget is not None:
-        # read lazily in _delay_map, so setting it before start() applies
-        eng._delay_keys_budget = budget
     eng.start(resume=False)
     eng.run()
     return eng
@@ -89,18 +86,29 @@ def test_parse_crawl_delay_rows():
     assert ("disallow", "/x/") in kinds
 
 
-@pytest.mark.parametrize("budget", [None, 0])
+@pytest.mark.parametrize(
+    "extra",
+    [
+        {"respect_crawl_delay": True},
+        {"respect_crawl_delay": True, "error_backoff": {"threshold": 1, "rounds": 3}},
+    ],
+    ids=["delay", "delay+backoff"],
+)
 def test_engine_matches_oracle_with_crawl_delay(
-    spark, delay_corpus, tmp_path_factory, budget
+    spark, delay_corpus, tmp_path_factory, extra
 ):
-    """budget=None (DELAY_KEYS_BUDGET) exercises the driver-dict fast path
-    (zero per-round delay jobs); budget=0 forces the distributed state-table fallback —
-    both must match the oracle identically."""
-    cfg = _cfg(respect=True)
-    eng = _run_engine(spark, delay_corpus, cfg, tmp_path_factory, budget)
+    """Crawl-delay alone, and Crawl-delay with the error breaker: both
+    rules write the one blocked-keys table, and the engine must match
+    the oracle identically either way."""
+    cfg = CrawlConfig(allowed_url_patterns=C.ALLOWED_PATTERNS, extra=extra)
+    eng = _run_engine(spark, delay_corpus, cfg, tmp_path_factory)
     ora = OracleCrawl(delay_corpus, cfg)
     ora.run()
     rows = _conformance(eng, ora)
+    if "error_backoff" in extra:
+        # the breaker really benched a key (the corpus plants a 5xx page),
+        # so both rules wrote rows into the shared table
+        assert ora.backoff_until, "no key was benched"
 
     # the delayed domains' fetches really are spaced >= delay_rounds apart
     import math
@@ -140,7 +148,7 @@ def test_default_off_matches_reference_semantics(
 @pytest.mark.slow
 def test_resume_mid_delay_window(spark, delay_corpus, tmp_path_factory):
     """Crash + resume while delayed domains are inside their windows:
-    the crawl_delay_state table rides the snapshot, so the resumed crawl
+    the blocked-keys table rides the snapshot, so the resumed crawl
     keeps honoring in-flight windows and lands on the same statuses,
     per-domain fetch order, and completed_round spacing as an
     uninterrupted run."""

@@ -20,7 +20,8 @@ def test_crawl_conformance_with_local_reads_disabled(spark, tmp_path, monkeypatc
     C.write_corpus(d, C.CorpusSpec(n_pages=30, n_domains=6, seed=5))
     cfg = CrawlConfig(
         allowed_url_patterns=C.ALLOWED_PATTERNS,
-        extra={"respect_crawl_delay": True},  # delay path's collect fallback too
+        # Crawl-delay on: the blocked-keys table rides the fallback crawl too
+        extra={"respect_crawl_delay": True},
     )
     eng = CrawlEngine(spark, cfg, d, str(tmp_path / "state"), checkpoint_interval=50)
     eng.start(resume=False)

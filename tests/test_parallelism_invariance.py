@@ -14,6 +14,7 @@ from __future__ import annotations
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
 
@@ -23,7 +24,7 @@ from crawlspark.engine import CrawlEngine
 
 _SUBPROC = """
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from crawlspark.config import CrawlConfig
 from crawlspark import corpus as C
 from crawlspark.engine import CrawlEngine
@@ -58,7 +59,9 @@ def test_same_outcome_at_different_parallelism(spark, tmp_path):
     }
 
     out = subprocess.run(
-        [sys.executable, "-c", _SUBPROC, d, str(tmp_path / "s2")],
+        # the subprocess imports the checkout under test, not an install
+        [sys.executable, "-c", _SUBPROC, d, str(tmp_path / "s2"),
+         str(Path(__file__).resolve().parents[1])],
         capture_output=True, text=True, timeout=900,
     )
     assert out.returncode == 0, out.stderr[-2000:]
